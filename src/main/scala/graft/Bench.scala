@@ -257,22 +257,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B knob for plan experiments (e.g. AQE coalescing on the
-    // candidate exchange): "k1=v1;k2=v2" applied over the defaults
-    // (';' so values may contain commas; see [[ExtraConf]]).
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietNoise()
+    // the factory applies the SPARK_GRAFT_EXTRA_CONF A/B knob for plan
+    // experiments (e.g. AQE coalescing on the candidate exchange)
+    val spark = Main.session()
     // Warm the JVM/codegen/IO paths once so the first measured query
     // doesn't absorb session bootstrap cost.
     spark.range(1000000L).selectExpr("sum(id)").write.format("noop")

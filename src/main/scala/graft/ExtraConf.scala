@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The `SPARK_GRAFT_EXTRA_CONF` A/B knob shared by [[Bench]] and
-  * [[Profile]] (one parser, not two copies — ADVICE r13): extra Spark
+/** The `SPARK_GRAFT_EXTRA_CONF` A/B knob, applied by the one session
+  * factory [[Main.session]] so every entry point honors it: extra Spark
   * confs applied over the harness defaults so a plan experiment (e.g.
   * AQE coalescing off on the candidate exchanges) runs under exactly
   * the config being benched.

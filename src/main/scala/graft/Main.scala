@@ -22,24 +22,32 @@ import graft.model.Schemas
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+  /** The one SparkSession factory: every main and the test suites
+    * build their session here. `cores` sets both `local[n]` and the
+    * shuffle partition count; it defaults to `SPARK_GRAFT_CPUS`, else
+    * the JVM's available processors. [[ExtraConf]] applies over the
+    * shared conf block.
+    */
+  private[graft] def session(
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val spark = ExtraConf(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Logs.quietNoise()
+    spark
   }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "inventory" :: sfDir :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
-      Logs.quietNoise()
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         println(s"[inventory] $name: ${fn(spark, sfDir).count()} rows")
       }
@@ -47,8 +55,6 @@ object Main {
 
     case "ingest" :: entity :: json :: lake :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
-      Logs.quietNoise()
       // table names are the plural forms Inspector.fromLake / clone read
       val (schema, silver, table) = entity match {
         case "campaign" => (Schemas.campaign, Bronze.campaignSilver _, "campaigns")
@@ -83,8 +89,6 @@ object Main {
 
     case "clone" :: lake :: campaignId :: idPrefix :: ingestDate :: Nil =>
       val spark = session()
-      spark.sparkContext.setLogLevel("WARN")
-      Logs.quietNoise()
       def tb(n: String) = spark.read.parquet(s"$lake/$n")
       val cloned = graft.queries.Cloner.cloneCampaign(
         tb("campaigns"), tb("ad_sets"), tb("ads"), campaignId, idPrefix,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected
   * queries and asserts the scale-critical properties hold —
   * projection/filter pushdown reaches the parquet scan, small dims
@@ -14,15 +12,9 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed 4 cores: the plan expectations below were written against
+    // local[4] / 4 shuffle partitions
+    val spark = Main.session(cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     var failures = 0

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiler: time one named query repeatedly through the noop
   * sink (same execution path as [[Bench]]) to separate real plan cost
   * from JVM/codegen warmup and shared-VM noise.
@@ -23,22 +21,9 @@ object Profile {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // same A/B knob as Bench ("k1=v1;k2=v2" over the defaults, shared
-    // parser in [[ExtraConf]]), so a profiled plan runs under the
-    // exact config being benched
-    ExtraConf(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietNoise()
+    // same factory as Bench (conf block + [[ExtraConf]]), so a profiled
+    // plan runs under the exact config being benched
+    val spark = Main.session()
     names.foreach { name =>
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
         val df = SparkEntry.queries(name)(spark, sfDir)

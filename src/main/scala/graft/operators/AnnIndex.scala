@@ -67,15 +67,6 @@ object AnnIndex {
         "(SCALE.md) — refusing to build them")
   }
 
-  /** Slice-stage diagnostics from the LAST [[optimize]] call —
-    * (max rows through any single (child, bucket) ranking partition,
-    * max single Voronoi-child size). Populated only under
-    * -Dgraft.ann.diag=1 (costs one extra scheduler-sized aggregate);
-    * AnnDiag reports it as the evidence that the rank-slice stage has
-    * no single-task exchange (VERDICT r15 #2).
-    */
-  @volatile private[graft] var lastSliceStats: Option[(Long, Long)] = None
-
   /** How many wanted-cell ids inline as a literal IN-list (static
     * partition pruning) before the probe paths switch to a
     * broadcast-semi-join filter (runtime partition pruning via DPP):
@@ -154,8 +145,8 @@ object AnnIndex {
     * ~|probes| × (k + ties) — the difference between an un-rankable
     * maintained index (hundreds of cells after [[optimize]] capping)
     * and a probe whose ranking stage is one codegen pass (measured in
-    * AnnDiag: the all-decimal ranking DOMINATED the capped index's
-    * probe, inverting the win from 52× fewer candidate pairs).
+    * ANN_DIAG_r14.json: the all-decimal ranking DOMINATED the capped
+    * index's probe, inverting the win from 52× fewer candidate pairs).
     *
     * Input probes as (p_id, p); output keeps (p_id, p, cid, c) AND
     * the decimal rank `rk` (1..k per probe; only the double helper
@@ -229,7 +220,7 @@ object AnnIndex {
     })
 
   /** True iff the LAST [[topCells]] call routed two-level —
-    * spec/diag surface, same pattern as [[lastSliceStats]].
+    * spec/diag surface.
     */
   @volatile private[graft] var lastRankingTwoLevel: Boolean = false
 
@@ -922,14 +913,15 @@ object AnnIndex {
         val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         graft.streaming.StreamLedger.once(f, root, checkpoint, batchId) {
           // SPREAD the micro-batch to the session's parallelism before
-          // anything reads it (VERDICT r15 #4, measured in
-          // SemStreamDiag): a trigger often delivers ONE small file
-          // (the atomic-rename arrival pattern), and the file source
-          // then runs the whole per-batch probe pipeline — double
-          // ranking, margin filters, the scoring join's stream side —
-          // as ONE task. At sf1 that made the streamed lifecycle 2.7×
-          // the identical batch lifecycle; spread, it is 0.9× (the
-          // stream SAVES append's re-ranking pass). One batch-sized
+          // anything reads it (VERDICT r15 #4, measured in the r16
+          // stream-vs-batch sweep, BENCH_SWEEP_*_r16.json): a trigger
+          // often delivers ONE small file (the atomic-rename arrival
+          // pattern), and the file source then runs the whole
+          // per-batch probe pipeline — double ranking, margin filters,
+          // the scoring join's stream side — as ONE task. At sf1 that
+          // made the streamed lifecycle 2.7× the identical batch
+          // lifecycle; spread, it is 0.9× (the stream SAVES append's
+          // re-ranking pass). One batch-sized
           // shuffle only when the arrival is narrower than the session
           // ([[graft.streaming.Spread]], ADVICE r16), verdicts
           // bit-identical (every downstream op is partitioning-
@@ -1545,11 +1537,6 @@ object AnnIndex {
     val offsets = bcounts
       .withColumn("off", coalesce(sum(col("bn")).over(offW), lit(0L)))
       .select(col("child"), col("bucket"), col("off"))
-    if ("1" == System.getProperty("graft.ann.diag")) {
-      val maxBucket = bcounts.agg(coalesce(max(col("bn")), lit(0L))).head()
-      lastSliceStats = Some((maxBucket.getLong(0),
-        sizes.map(_._2).maxOption.getOrElse(0L)))
-    }
     val reassigned = thin
       .withColumn("lr", row_number().over(localW))
       .join(offsets, Seq("child", "bucket"))
@@ -1628,7 +1615,8 @@ object AnnIndex {
     // earlier optimize/recover stays readable across that many later
     // optimizes; every in-repo caller re-adopts the newest returned
     // frame (streams on each recovery), and long-held frames should
-    // be eagerly localCheckpoint'd (the AnnDiag loop idiom).
+    // be eagerly localCheckpoint'd (the iterated-optimize loop that
+    // produced ANN_DIAG_r14.json does this).
     refreshed.coalesce(1).write.parquet(s"$staging/centroids")
     members.unpersist(blocking = false)
     if (failAfterSwaps == -1)

@@ -102,8 +102,6 @@ object ConnectedComponents {
       round += 1
     }
     lastRounds = round
-    if (java.lang.Boolean.getBoolean("graft.cc.diag"))
-      println(s"[cc-diag] converged in $round rounds")
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds")

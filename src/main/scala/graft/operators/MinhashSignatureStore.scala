@@ -701,10 +701,11 @@ object MinhashSignatureStore {
             new org.apache.hadoop.fs.Path(storeDir), checkpoint, batchId) {
           // SPREAD the micro-batch to the session's parallelism before
           // anything reads it (the AnnIndex.dedupStream fix, measured
-          // in SemStreamDiag): the atomic-rename arrival pattern
-          // delivers ONE file per trigger, and tokenize + signatures +
-          // band rows are all row-local work that would otherwise run
-          // as ONE task. GATED on the incoming partition count
+          // in the r16 stream-vs-batch sweep, BENCH_SWEEP_*_r16.json):
+          // the atomic-rename arrival pattern delivers ONE file per
+          // trigger, and tokenize + signatures + band rows are all
+          // row-local work that would otherwise run as ONE task.
+          // GATED on the incoming partition count
           // (ADVICE r16): a trigger that already delivers >= |cores|
           // splits is spread enough, and the unconditional repartition
           // was a pure batch-sized shuffle there. Then persist: the
@@ -1030,9 +1031,6 @@ object MinhashSignatureStore {
       val bound = candidateUpperBound(spark, storeDir, inc)
       val fits = bound / PairsPerStaticPartition + 1 <=
         spark.conf.get("spark.sql.shuffle.partitions").toLong
-      if (java.lang.Boolean.getBoolean("graft.debug.sizing"))
-        // scheduler-sized debug line, opt-in via sysprop
-        println(s"[mss-sizing] bound=$bound fits=$fits")
       val perDoc = withCensusExchangeConf(spark,
           if (fits) bound else bandCollisions(storeBands, inc).count()) {
         censusPerDoc(spark, arrs, inc, storeDocs, storeBands, threshold)
@@ -1084,7 +1082,6 @@ object MinhashSignatureStore {
       .agg(coalesce(max(col("m")), lit(0L)).as("maxm"),
         coalesce(sum(col("m") * (col("m") - lit(1L))), lit(0L)).as("sp2"))
       .head()
-    val t0 = System.nanoTime()
     val root = new org.apache.hadoop.fs.Path(storeDir)
     val fss = fs(spark, storeDir)
     val storeRows = readBandsRows(fss, root) match {
@@ -1093,8 +1090,6 @@ object MinhashSignatureStore {
         // roll-forward seeds [[BandsRowsFile]] and retires this path
         footerSweep(fss, new org.apache.hadoop.fs.Path(root, "bands"))
     }
-    if (java.lang.Boolean.getBoolean("graft.debug.sizing"))
-      println(f"[mss-sizing] store rows in ${(System.nanoTime() - t0) / 1e6}%.1f ms rows=$storeRows")
     storeRows * st.getLong(0) + st.getLong(1) / 2
   }
 
@@ -1252,39 +1247,6 @@ object MinhashSignatureStore {
         col("n_dups").isNull.as("keep"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         coalesce(col("max_jaccard"), lit(0.0)).as("max_jaccard"))
-
-  /** Scale-accounting probe (diagnostic, the x02 MinhashDiag idiom
-    * lifted to the store): candidate / verified-match counts for one
-    * batch against the store, the numbers that attribute a bench
-    * step to plan cost vs match volume (VERDICT r12 #4). Runs the
-    * census verify once — this IS the expensive path being measured.
-    */
-  private[graft] def probeStats(spark: SparkSession, incoming: DataFrame,
-      storeDir: String, perms: Seq[(Int, Long, Long)],
-      threshold: Double): Seq[(String, Long)] = {
-    recoverForRead(spark, storeDir)
-    val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
-    val storeBands = spark.read.parquet(s"$storeDir/bands")
-    val storeDocs = spark.read.parquet(s"$storeDir/docs")
-    graft.expressions.SortedIntersectCount.register(spark)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val arrs = tokenSets(incoming).persist(lvl)
-    val cand = bandCollisions(storeBands,
-        bandRows(signatures(arrs, nHashes, perms), nHashes, nBands, buckets))
-      .distinct().persist(lvl)
-    try withAdvisoryCap(spark) {
-      val nCand = cand.count()
-      val nMatches = withCensusExchangeConf(spark, nCand) {
-        verifiedMatches(spark, cand, arrs, storeDocs,
-          threshold, batchVocabCount(arrs)).count()
-      }
-      Seq("n_batch" -> incoming.count(), "n_store_docs" -> storeDocs.count(),
-        "n_candidates" -> nCand, "n_matches" -> nMatches)
-    } finally {
-      cand.unpersist(blocking = false)
-      arrs.unpersist(blocking = false)
-    }
-  }
 
   /** How many top-ranked candidates each doc verifies in the rep
     * stage's resolve round. The top-ranked candidates are the

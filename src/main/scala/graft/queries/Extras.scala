@@ -368,43 +368,6 @@ object Extras {
     }
   }
 
-  /** x02 candidate accounting (VERDICT r11 #1: the sf10 step was
-    * undiagnosable because the banded candidate-pair count was never
-    * logged): per-corpus driver-side scalars — docs, scheme, distinct
-    * token sets, representative-level band candidates, and final
-    * result rows. Candidates count at the REPRESENTATIVE level
-    * (identical-set compression applied, as the operator runs), so the
-    * table separates plan-bound cost (signatures + candidates + verify)
-    * from output-bound cost (the member-expanded pair dump).
-    * Driven by [[graft.MinhashDiag]]; each value is one count scalar.
-    */
-  def x02Diag(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    import s.implicits._
-    // multi-action diagnostic (several counts), so a plain persist
-    // scope rather than withPersisted's one-action contract
-    val toks = tokIndex(s, dir).persist()
-    try {
-      val nDocs = t(s, dir, "documents").count()
-      val (nHashes, nBands) = minhashSchemeFor(nDocs)
-      val arrs = toks.groupBy($"doc_id")
-        .agg(sort_array(collect_list($"tok")).as("arr"))
-        .withColumn("h", TextFns.setIdentity($"arr"))
-      val reps = arrs.groupBy($"h").agg(min($"doc_id").as("doc_id"))
-      val nSets = reps.count()
-      val mhCols = Perms.take(nHashes).map { case (j, a, b) =>
-        min((lit(a) * $"th" + lit(b)) % P).as(s"mh$j")
-      }
-      val sig = toks.join(reps.select($"doc_id"), Seq("doc_id"), "left_semi")
-        .withColumn("th", TextFns.tokHash($"tok"))
-        .groupBy($"doc_id").agg(mhCols.head, mhCols.tail: _*)
-      val nCand = minhashBandCandidates(sig, nHashes, nBands).count()
-      val nRes = x02DedupMinhashLsh(s, dir).count()
-      Seq("n_docs" -> nDocs, "n_hashes" -> nHashes.toLong,
-        "n_bands" -> nBands.toLong, "n_distinct_sets" -> nSets,
-        "n_band_candidates" -> nCand, "n_result_rows" -> nRes)
-    } finally toks.unpersist()
-  }
-
   /** Per-doc SimHash signature frame (doc_id, simhash) — shared by x03
     * (the signature dump) and x14 (signature-equality dedup edges).
     *
@@ -3839,36 +3802,6 @@ object Extras {
           round($"tdrift", 6).as("top_drift"))
         .orderBy($"label")
     }
-  }
-
-  /** x71/x78 scale accounting ([[graft.MinhashDiag]] `x71` mode,
-    * VERDICT r12 #4): for batch 1 of the lifecycle at this corpus
-    * scale, the candidate volume, the ≥-threshold match volume (what
-    * the census contract must verify), and the short-circuit mode's
-    * actually-verified pair count with its census-identical verdict
-    * tally — the numbers that attribute the census keys' superlinear
-    * bench steps to match DENSITY (corpus property) vs plan cost, and
-    * prove the verdict-only bound empirically at every scale.
-    */
-  private[graft] def x71Diag(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    import s.implicits._
-    val mss = graft.operators.MinhashSignatureStore
-    val docs = t(s, dir, "documents").select($"doc_id", $"text")
-    val b1 = docs.filter($"doc_id" % 8 === 1)
-    val store = pristineStoreFor(s, dir) // probes are read-only
-    val t0 = System.nanoTime()
-    val census = mss.probeStats(s, b1, store, Perms, MinhashJaccardThreshold)
-    val t1 = System.nanoTime()
-    val st = mss.dedupVerdictsWithStats(
-      s, b1, store, Perms, MinhashJaccardThreshold)
-    val nKept = st.verdicts.filter($"keep").count()
-    val t2 = System.nanoTime()
-    census ++ Seq(
-      "verdict_cand_pairs" -> st.generatedPairs,
-      "verdict_verify_pairs" -> st.verifiedPairs,
-      "verdict_kept" -> nKept,
-      "census_probe_ms" -> (t1 - t0) / 1000000L,
-      "verdict_probe_ms" -> (t2 - t1) / 1000000L)
   }
 
   /** x78 — VERDICT-ONLY incremental near-dup dedup (VERDICT r12 #1):

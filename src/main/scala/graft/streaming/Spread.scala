@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
   * file source with atomic-rename arrivals: a trigger then often
   * delivers ONE small file, and every row-local stage downstream
   * (tokenize, signatures, embedding assignment) runs as ONE task
-  * until the first shuffle (VERDICT r15 #4, measured in
-  * SemStreamDiag: 2.7× the batch lifecycle at sf1, 0.9× once
-  * spread). The repartition is GATED on the incoming partition count
-  * (ADVICE r16): a batch already carved into >= session-parallelism
+  * until the first shuffle (VERDICT r15 #4, measured in the r16
+  * stream-vs-batch sweep, BENCH_SWEEP_*_r16.json: 2.7× the batch
+  * lifecycle at sf1, 0.9× once spread). The repartition is GATED on
+  * the incoming partition count (ADVICE r16): a batch already carved into >= session-parallelism
   * splits gains nothing from re-spreading, and the unconditional
   * version paid a full batch-sized shuffle on exactly the wide
   * arrivals where batches are biggest.

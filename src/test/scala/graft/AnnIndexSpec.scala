@@ -321,7 +321,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // the frame held from the FIRST optimize is within the retention
     // window iff its version survived GC; the contract is that
     // in-window frames stay readable (holders beyond it re-adopt or
-    // localCheckpoint — the AnnDiag loop idiom)
+    // localCheckpoint — as the iterated-optimize loop behind
+    // ANN_DIAG_r14.json does)
     val heldOk = try { held.count() > 0 } catch { case _: Throwable => false }
     val realOptimizes = vs.size // every kept version was a real split pass
     if (realOptimizes < 4)
