@@ -19,9 +19,18 @@ import graft.expressions.{DecimalDot, SortedIntersectCount, UnicodeUnescape}
   * (`DecimalDot.register(spark)` etc.) so it works on stock sessions;
   * this class is the idiomatic wiring for clusters where the session
   * is built by the platform, not the job.
+  *
+  * It also registers the engine's `file:` filesystem classes
+  * ([[graft.io.LocalFs]]) on the running context's Hadoop conf: Hadoop's
+  * pure-Java local filesystem forks `chmod` for every file it creates,
+  * which dominated a small daily commit. A class the user set under
+  * `spark.hadoop.fs.file.impl` or `spark.hadoop.fs.AbstractFileSystem.file.impl`
+  * is kept.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.ActiveContext().foreach(sc => graft.io.LocalFs.install(sc.hadoopConfiguration))
+
     def info(name: String, usage: String) =
       new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
         "", "", "", "", "", "", "scala_udf")

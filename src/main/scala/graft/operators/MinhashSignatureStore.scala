@@ -1115,30 +1115,31 @@ object MinhashSignatureStore {
     * no Spark job, no data pages read; one recursive listing plus one
     * small metadata read per file NOT already in [[footerRowCache]].
     * The LEGACY/seed path only ([[BandsRowsFile]] is the steady
-    * state): even fully cached, the recursive listing alone measured
-    * ~0.6 s at ~200 local files (Hadoop's local FS shells out per
-    * file for permission bits) — fine once, not per micro-batch.
+    * state): a fully cached sweep still lists every file, which is
+    * fine once, not per micro-batch. The walk uses plain `listStatus`:
+    * `listFiles` wraps each status in a `LocatedFileStatus`, which
+    * copies its permission bits, and Hadoop's pure-Java local
+    * filesystem loads those by running `ls -ld` per file.
     */
   private def footerSweep(f: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Long = {
     if (!f.exists(dir)) return 0L
     if (footerRowCache.size > 1000000) footerRowCache.clear()
-    val it = f.listFiles(dir, true)
-    var n = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        n += footerRowCache.computeIfAbsent(
-          (st.getPath.getParent.getName + "/" + st.getPath.getName,
-            st.getLen), { _ =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, f.getConf))
-            try rd.getRecordCount finally rd.close()
-          })
+    // built once: `open(InputFile)` alone re-parses Hadoop's XML config
+    // for every footer
+    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(f.getConf).build()
+    def files(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      f.listStatus(p).iterator.flatMap { st =>
+        if (st.isDirectory) files(st.getPath) else Iterator(st)
       }
-    }
-    n
+    files(dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      footerRowCache.computeIfAbsent(
+        (st.getPath.getParent.getName + "/" + st.getPath.getName, st.getLen), { _ =>
+          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf), opts)
+          try rd.getRecordCount finally rd.close()
+        })
+    }.sum
   }
 
   /** ~1M two-long pair rows per static post-shuffle partition keeps a

@@ -197,12 +197,16 @@ object SnapshotLog {
     */
   private def collectStats(f: FileSystem, tableDir: String,
       rels: Seq[String]): Map[String, Map[String, (Double, Double)]] = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.column.statistics._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    // one options object per commit: `open(InputFile)` alone builds a
+    // fresh Hadoop Configuration, re-parsing its XML, for every footer
+    val opts = HadoopReadOptions.builder(f.getConf).build()
     rels.map { rel =>
       val in = HadoopInputFile.fromPath(dataPath(tableDir, rel), f.getConf)
-      val r = ParquetFileReader.open(in)
+      val r = ParquetFileReader.open(in, opts)
       val cols = try {
         r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
           .flatMap { c =>
@@ -1178,6 +1182,19 @@ object SnapshotLog {
       tableDir: String): Option[Snapshot] =
     latestVersion(spark, tableDir).map(snapshotAt(spark, tableDir, _))
 
+  /** The head snapshot and its rows, resolved ONCE. A rewriter must
+    * read the same version it commits against: resolving the head a
+    * second time for the commit base could pick up an append that the
+    * read never saw, and the rebase would then unlink that append's
+    * file with its rows in no rewrite — lost without an error.
+    */
+  private def headWithRows(spark: SparkSession,
+      tableDir: String): (Snapshot, DataFrame) = {
+    val snap = headSnapshot(spark, tableDir).getOrElse(
+      sys.error(s"$tableDir has no committed snapshot"))
+    (snap, readFiles(spark, tableDir, snap, snap.files))
+  }
+
   /** Total size of one partition's listed files with ONE `listStatus`
     * per LOCAL partition directory (the compaction planner's cost
     * class — O(partitions) metadata calls, not O(files)); foreign
@@ -1239,8 +1256,7 @@ object SnapshotLog {
     */
   def deleteByKeys(spark: SparkSession, tableDir: String, keyCol: String,
       keys: DataFrame, partCol: String): (Long, Seq[Any]) = {
-    val table = read(spark, tableDir)
-    val snap = snapshotAt(spark, tableDir, latestVersion(spark, tableDir).get)
+    val (snap, table) = headWithRows(spark, tableDir)
     val affected = table
       .join(broadcast(keys), Seq(keyCol), "left_semi")
       .select(col(partCol)).distinct()
@@ -1375,8 +1391,7 @@ object SnapshotLog {
     */
   def merge(spark: SparkSession, tableDir: String, updates: DataFrame,
       keyCol: String, partCol: String): (Long, Seq[Any]) = {
-    val table = read(spark, tableDir)
-    val snap = snapshotAt(spark, tableDir, latestVersion(spark, tableDir).get)
+    val (snap, table) = headWithRows(spark, tableDir)
     require(table.columns.sorted.sameElements(updates.columns.sorted),
       s"merge schema mismatch: table has ${table.columns.sorted.mkString(",")}" +
       s" vs updates ${updates.columns.sorted.mkString(",")}")
@@ -1428,13 +1443,17 @@ object SnapshotLog {
     }
     if (flagged.isEmpty) return (head, Nil)
     val replaced = flagged.flatMap(_._2).toSet
-    val added = flagged.flatMap { case (_, files, nOut) =>
-      // DV-aware read: compaction PHYSICALLY PURGES merge-on-read
-      // deletes (the rewritten files carry survivors only, and the
-      // replaced files' DV entries fall out of the new snapshot)
-      val part = readFiles(spark, tableDir, snap, files)
-      stage(part.repartition(nOut), tableDir, snap.partCols)
-    }
+    // ONE write job for every flagged partition: each partition's rows
+    // are spread over its own `nOut` tasks, so it still lands as at
+    // most `nOut` files, and AQE runs the per-partition exchanges side
+    // by side instead of one write job after another. DV-aware read:
+    // compaction PHYSICALLY PURGES merge-on-read deletes (the rewritten
+    // files carry survivors only, and the replaced files' DV entries
+    // fall out of the new snapshot)
+    val rewritten = flagged.map { case (_, files, nOut) =>
+      readFiles(spark, tableDir, snap, files).repartition(nOut)
+    }.reduce(_ unionByName _)
+    val added = stage(rewritten, tableDir, snap.partCols)
     // conflict domain = exactly the files being rewritten: if a racing
     // delete unlinked any of them, re-adding their contents would
     // resurrect deleted rows → abort; racing appends commute (their

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1228,5 +1230,74 @@ class SnapshotLogSpec extends AnyFunSuite {
       "exactly the dirty file's branch pays the DV anti-join")
     assert(plan.contains("Union"),
       "the clean file unions in through its own scan, outside the join")
+  }
+
+  test("merge and deleteByKeys resolve the head once and read what they commit on") {
+    val t = freshTable()
+    SnapshotLog.overwrite(rows("a", 1 to 4).union(rows("b", 5 to 8)), t, Seq("part"))
+    SnapshotLog.append(rows("b", 9 to 10), t, Seq("part"))
+    SnapshotLog.append(rows("c", 11 to 12), t, Seq("part"))
+    def docReads(body: => Unit): Long = {
+      val r0 = SnapshotLog.docReads.get
+      body
+      SnapshotLog.docReads.get - r0
+    }
+    // one resolution of the head replays checkpoint v1 plus its deltas;
+    // the commit resolves the head once more for its race check, so a
+    // rewriter that reads through its own snapshot costs exactly two.
+    // Resolving the head again for the read (the old `read` + snapshotAt
+    // pair) costs three, and an append landing between those two
+    // resolutions would be unlinked with its rows in no rewrite.
+    def headCost = docReads(SnapshotLog.snapshotAt(spark, t,
+      SnapshotLog.latestVersion(spark, t).get))
+    val mergeCost = headCost
+    assert(docReads(SnapshotLog.merge(spark, t,
+      Seq((2L, "a", "u2"), (100L, "c", "new")).toDF("id", "part", "payload"),
+      "id", "part")) == 2 * mergeCost)
+    val deleteCost = headCost
+    assert(docReads(SnapshotLog.deleteByKeys(spark, t, "id",
+      Seq(9L).toDF("id"), "part")) == 2 * deleteCost)
+    assert(SnapshotLog.read(spark, t).select("id").as[Long].collect().sorted.toSeq
+      == Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 10L, 11L, 12L, 100L))
+  }
+
+  test("compaction rewrites every flagged partition in one write job") {
+    val t = freshTable()
+    // three partitions of different sizes, five small files each
+    (1 to 5).foreach(i => SnapshotLog.append(
+      rows("a", (i * 100) until (i * 100 + 40))
+        .union(rows("b", (i * 100 + 40) until (i * 100 + 50)))
+        .union(rows("c", Seq(i * 100 + 50))).repartition(1), t, Seq("part")))
+    val before = SnapshotLog.read(spark, t).as[(Long, String, String)].collect().sorted.toSeq
+    def partBytes(p: String) = new java.io.File(s"$t/part=$p").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val target = partBytes("a") / 3 + 1 // a: 3 files; b, c: fewer
+    val expected = Seq("a", "b", "c").map(p => p -> (partBytes(p) + target - 1) / target).toMap
+    val jobs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[org.apache.spark.scheduler.SparkListenerJobStart]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e)
+    }
+    org.apache.spark.SchedulerProbe.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (v, parts) = try SnapshotLog.compact(spark, t, targetFileBytes = target, maxFiles = 1)
+      finally {
+        org.apache.spark.SchedulerProbe.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(parts == Seq("part=a", "part=b", "part=c"))
+    // a write job ends in a result stage; AQE's shuffle-map jobs do not
+    val writeJobs = jobs.asScala.count(org.apache.spark.SchedulerProbe.endsInResultStage)
+    assert(writeJobs == 1, s"$writeJobs write jobs for ${parts.size} partitions")
+    val snap = SnapshotLog.snapshotAt(spark, t, v)
+    snap.files.groupBy(_.takeWhile(_ != '/')).foreach { case (dir, files) =>
+      val p = dir.stripPrefix("part=")
+      assert(files.size >= 1 && files.size <= expected(p),
+        s"$dir: ${files.size} files, at most ${expected(p)}")
+    }
+    assert(snap.files.size < 15)
+    assert(SnapshotLog.read(spark, t).as[(Long, String, String)].collect().sorted.toSeq
+      == before, "compaction is data-identical")
   }
 }
