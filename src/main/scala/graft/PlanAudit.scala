@@ -346,9 +346,9 @@ object PlanAudit {
         (_.contains("decimal_dot")),
       "no cartesian product" -> (p => !p.contains("CartesianProduct")))
     // x82/x83: the two-level-routed probes — the ranking plan changed
-    // (router forced by the keys' scoped sysprops), but the SERVING
-    // claims must hold unchanged: the index scan still prunes to the
-    // chosen cells, decimal kernels still score, and the two-level
+    // (router forced by the keys' scoped session settings), but the
+    // SERVING claims must hold unchanged: the index scan still prunes
+    // to the chosen cells, decimal kernels still score, and the two-level
     // pair construction is thin joins — a CartesianProduct anywhere
     // means an n_cells-sized pair blowup crept into the new path
     audit("x82_ann_twolevel")(

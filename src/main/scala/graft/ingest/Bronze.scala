@@ -58,11 +58,15 @@ object Bronze {
     * The bronze frame is persisted for the split (Spark disallows
     * corrupt-column-only queries straight off a raw JSON scan — and
     * the caller's silver pass reuses the parse anyway), released after
-    * the caller's first action via [[graft.Caching.withPersisted]].
+    * the caller's first action via [[graft.Caching.withPersistedThrough]]:
+    * the bad-row probe and write are actions on the cached frame too,
+    * and releasing after the first of them let the write and the
+    * caller's first action race the asynchronous unpersist onto the
+    * raw scan, which Spark rejects.
     */
   def quarantine(bronze: DataFrame, lake: String, entity: String,
       batchTag: Option[String] = None): DataFrame =
-    graft.Caching.withPersisted(bronze) { b =>
+    graft.Caching.withPersistedThrough(bronze) { b =>
       val bad = b.filter(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record").as("raw"))
       if (bad.head(1).nonEmpty) batchTag match {

@@ -39,6 +39,25 @@ object AnnIndex {
   private def fdotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     graft.expressions.DoubleDot.doubleDot(a, b)
 
+  /** The index's two session settings, read through [[setting]] from
+    * the session's conf when a plan is built (so `--conf`,
+    * `SPARK_GRAFT_EXTRA_CONF` and `spark.conf.set` all reach them, and
+    * two sessions on one driver never see each other's values):
+    *  - [[CentroidLimitKey]] (default 262144 cells): past it the probe
+    *    ranking routes two-level ([[routesTwoLevel]]), maintenance
+    *    persists supers ([[optimizeIfOutgrown]]) and optimize refuses
+    *    to reorganize ([[guardCentroidScale]]);
+    *  - [[NsuperKey]] (default 8): the two-level descent width
+    *    ([[topCellsTwoLevel]]).
+    */
+  private[graft] val CentroidLimitKey = "spark.graft.ann.centroid.limit"
+  private[graft] val NsuperKey = "spark.graft.ann.nsuper"
+
+  private val settingDefaults = Map(CentroidLimitKey -> 262144L, NsuperKey -> 8L)
+
+  private def setting(spark: SparkSession, key: String): Long =
+    spark.conf.getOption(key).fold(settingDefaults(key))(_.trim.toLong)
+
   /** Hard ceiling on the centroid-set size for [[optimize]] (VERDICT
     * r15 #3). The PROBE paths no longer share it: past the same limit
     * their ranking routes through the two-level coarse quantizer
@@ -50,14 +69,14 @@ object AnnIndex {
     * / final slice) and the fact that a mega-rebalance has never been
     * MEASURED — the Lloyd/seed join hints are already conditional on
     * the driver-known child count (`bcastR`: past
-    * -Dgraft.ann.broadcast.rows.limit the hints drop and AQE picks
+    * [[ReorgBroadcastRowsLimit]] the hints drop and AQE picks
     * shuffle joins from runtime sizes), so the structural pieces are
     * in place, and lifting the refusal is a measurement task, not a
-    * design one (SCALE.md r18). Overridable for tests via
-    * -Dgraft.ann.centroid.limit.
+    * design one (SCALE.md r18). The limit is the session setting
+    * [[CentroidLimitKey]].
     */
-  private def guardCentroidScale(n: Long): Unit = {
-    val limit = java.lang.Long.getLong("graft.ann.centroid.limit", 262144L)
+  private def guardCentroidScale(spark: SparkSession, n: Long): Unit = {
+    val limit = setting(spark, CentroidLimitKey)
     if (n > limit) sys.error(
       s"AnnIndex centroid set has $n cells > broadcast-sane limit $limit: " +
         "raise maxOccupancy (optimizeIfOutgrown's √n policy keeps " +
@@ -72,19 +91,19 @@ object AnnIndex {
     * broadcast-semi-join filter (runtime partition pruning via DPP):
     * a 10⁴–10⁵-cell index would otherwise bloat every probe plan with
     * a 10⁴-literal predicate — plan size and compile time grow with
-    * the index instead of the probe (VERDICT r14 #4). Overridable for
-    * tests via -Dgraft.ann.isin.limit.
+    * the index instead of the probe (VERDICT r14 #4).
     */
-  private def isinCellLimit: Int =
-    Integer.getInteger("graft.ann.isin.limit", 256)
+  private val IsinCellLimit = 256
 
-  /** The index scan restricted to `cellIds`, pruned BEFORE any row is
-    * read: small id sets inline as a static partition filter; large
+  /** The index scan restricted to `cellIds`: small id sets inline as
+    * a static partition filter, pruned BEFORE any row is read; large
     * ones become a broadcast left-semi join against a one-column
-    * cell-id frame, which dynamic partition pruning turns into a
-    * runtime partition filter on the scan (the id frame is cast to
-    * the discovered partition-column type so the scan side stays a
-    * bare attribute — a cast there would defeat DPP).
+    * cell-id frame. That semi join alone prunes no partition (DPP does
+    * not treat a local id relation as a selective filtering side); the
+    * runtime partition filter comes from the probe paths' join of the
+    * scan to their ranked cells. The id frame is cast to the
+    * discovered partition-column type so the scan side stays a bare
+    * attribute — a cast there would defeat that DPP.
     */
   private def wantedCellScan(spark: SparkSession, path: String,
       cellIds: Seq[Long]): DataFrame =
@@ -100,11 +119,13 @@ object AnnIndex {
     * the directory tree (r17, guide §6). Partition pruning — static
     * isin or the DPP semi-join — operates on the frame's cached
     * listing either way; the routing and the plan are unchanged.
+    * `isinLimit` is a parameter only so a spec can take the DPP branch
+    * at fixture size.
     */
-  private def wantedCellScan(index: DataFrame,
-      cellIds: Seq[Long]): DataFrame = {
+  private[graft] def wantedCellScan(index: DataFrame, cellIds: Seq[Long],
+      isinLimit: Int = IsinCellLimit): DataFrame = {
     val spark = index.sparkSession
-    if (cellIds.lengthCompare(isinCellLimit) <= 0)
+    if (cellIds.lengthCompare(isinLimit) <= 0)
       index.filter(col("cell").isin(cellIds: _*))
     else {
       import spark.implicits._
@@ -159,24 +180,24 @@ object AnnIndex {
     * ranking paths below; [[topCells]] routes between them by
     * centroid-set size.
     */
+  private def topCells(probes: DataFrame, centroids: DataFrame,
+      k: Int, indexPath: Option[String] = None): DataFrame =
+    if (routesTwoLevel(centroids))
+      topCellsTwoLevel(probes, centroids, k, cellCount(centroids), indexPath)
+    else topCellsFlat(probes, centroids, k)
+
   /** Ranking-path router: the flat single-level ranking broadcasts
     * the whole centroid set, which is the right plan up to the
     * broadcast-sane bound and a driver/executor memory event past it
-    * — so past `-Dgraft.ann.centroid.limit` (default 262144) the
+    * — so past the centroid frame's session [[CentroidLimitKey]] the
     * ranking routes through the TWO-LEVEL coarse quantizer
     * ([[topCellsTwoLevel]]) instead. n_cells comes from a per-frame
     * memo ([[cellCount]]): the streaming paths reuse one adopted
     * centroids frame across micro-batches, so the count job runs once
     * per adopted set, not per batch.
     */
-  private def topCells(probes: DataFrame, centroids: DataFrame,
-      k: Int, indexPath: Option[String] = None): DataFrame = {
-    val limit = java.lang.Long.getLong("graft.ann.centroid.limit", 262144L)
-    val n = cellCount(centroids)
-    lastRankingTwoLevel = n > limit
-    if (n > limit) topCellsTwoLevel(probes, centroids, k, n, indexPath)
-    else topCellsFlat(probes, centroids, k)
-  }
+  private[graft] def routesTwoLevel(centroids: DataFrame): Boolean =
+    cellCount(centroids) > setting(centroids.sparkSession, CentroidLimitKey)
 
   /** Memoized centroid-set size per FRAME INSTANCE (identity-keyed,
     * weak, so dropped frames GC): the ranking router needs n_cells
@@ -219,23 +240,6 @@ object AnnIndex {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     })
 
-  /** True iff the LAST [[topCells]] call routed two-level —
-    * spec/diag surface.
-    */
-  @volatile private[graft] var lastRankingTwoLevel: Boolean = false
-
-  /** True iff the LAST two-level ranking took its supers from the
-    * layout ([[persistSupers]]) instead of constructing them —
-    * spec/diag surface. Memo hits report the provenance of the
-    * memoized frames (tracked per frame instance alongside
-    * [[superMemo]]).
-    */
-  @volatile private[graft] var lastSupersFromLayout: Boolean = false
-
-  private val superFromLayoutMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Boolean]())
-
   /** TWO-LEVEL coarse quantizer (the guard's named escape, VERDICT
     * r16 missing #1): for n_cells past the broadcast bound, cluster
     * the CELL CENTROIDS under k₂ = ⌈√n_cells⌉ super-centroids and
@@ -253,7 +257,7 @@ object AnnIndex {
     * like the mean and sidesteps decimal division), and both ranking
     * stages share the flat path's tie rules.
     *
-    * The descent width `-Dgraft.ann.nsuper` (default 8) is the
+    * The descent width [[NsuperKey]] (default 8) is the
     * recall/cost dial of every two-level IVF: a cell whose super was
     * not ranked in the top-nsuper is not considered — missed BY
     * CONTRACT, like nprobe at level 1. With nsuper ≥ k₂ every cell is
@@ -278,9 +282,9 @@ object AnnIndex {
     * frames whose lineage holds no reference to the input frame.
     *
     * Two construction paths with BIT-IDENTICAL selection (spec-pinned):
-    * past `-Dgraft.ann.supers.direct.pairs` (cells × k₂ candidate
-    * pairs) the membership runs through [[assign]]'s double-pruned
-    * decimal argmax — at scale the prune is what keeps BigDecimal work
+    * past `directPairs` (cells × k₂ candidate pairs; a parameter only
+    * so a spec can take both paths) the membership runs through
+    * [[assign]]'s double-pruned decimal argmax — at scale the prune is what keeps BigDecimal work
     * O(n_cells) instead of O(n_cells·√n_cells). Under the bound the
     * pair set is scheduler-sized and the prune's extra exchanges
     * (pre-aggregate + re-join) cost more than they save, so the
@@ -291,11 +295,9 @@ object AnnIndex {
     * read the 16-row checkpoint instead of re-joining the input
     * (r18: one join and one exchange fewer per construction).
     */
-  private def computeSupers(centroids: DataFrame,
-      k2: Int): (DataFrame, DataFrame) = {
+  private[graft] def computeSupers(centroids: DataFrame, k2: Int,
+      directPairs: Long = SupersDirectPairs): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val directPairs =
-      java.lang.Long.getLong("graft.ann.supers.direct.pairs", 262144L)
     val nCells = cellCount(centroids)
     val seeds = centroids.orderBy(col("cid")).limit(k2)
     val asgv =
@@ -328,6 +330,8 @@ object AnnIndex {
       .localCheckpoint(true)
     (so, sc)
   }
+
+  private val SupersDirectPairs = 262144L
 
   /** Layout home of the persisted super assignment (underscore
     * prefix: invisible to parquet readers of the index). One version
@@ -411,18 +415,11 @@ object AnnIndex {
     graft.expressions.DoubleDot.register(spark)
     val fdot = graft.functions.VectorFns.dotFast _
     val k2 = math.ceil(math.sqrt(nCells.toDouble)).toInt
-    val nsuper = math.max(1L,
-      java.lang.Long.getLong("graft.ann.nsuper", 8L)).toInt
-    val (superOf, superCents) = superMemo.computeIfAbsent(centroids, { _ =>
-      indexPath.flatMap(readPersistedSupers(spark, _, centroids)) match {
-        case Some(persisted) =>
-          superFromLayoutMemo.put(centroids, java.lang.Boolean.TRUE)
-          persisted
-        case None => computeSupers(centroids, k2)
-      }
-    })
-    lastSupersFromLayout =
-      java.lang.Boolean.TRUE == superFromLayoutMemo.get(centroids)
+    val nsuper =
+      math.max(1L, setting(centroids.sparkSession, NsuperKey)).toInt
+    val (superOf, superCents) = superMemo.computeIfAbsent(centroids, _ =>
+      indexPath.flatMap(readPersistedSupers(spark, _, centroids))
+        .getOrElse(computeSupers(centroids, k2)))
     val topSuper = topCellsFlat(probes, superCents, nsuper)
       .select(col("p_id"), col("cid").as("sid"))
     val candCells = topSuper.join(superOf, Seq("sid"))
@@ -525,7 +522,8 @@ object AnnIndex {
     // often arrive as one or two parquet files — 2-second serial jobs
     // on an otherwise idle 32-core box (r18, guide §2.4). Widen narrow
     // inputs to the session's width; the session's shuffle.partitions
-    // is the cap so a stream's data-sized batch scope ([[batchSizing]])
+    // is the cap so a stream's data-sized batch scope
+    // ([[graft.streaming.Spread.batchSizing]])
     // is honored rather than re-widened. Wide inputs pass through;
     // scheduler-sized inputs (the two-level super construction assigns
     // one ROW per cell centroid) opt out — widening those just buys
@@ -709,6 +707,14 @@ object AnnIndex {
       path: String): Unit =
     appendFrame(embeddings.sparkSession, path, assign(embeddings, centroids))
 
+  /** Raw input bytes per partition for a micro-batch's data-sized
+    * parallelism ([[graft.streaming.Spread.batchSizing]], r18):
+    * embedding rows are wide and the per-row work (double dots) light
+    * relative to tokenization, so the divisor is larger than the
+    * minhash store's.
+    */
+  private val StreamBytesPerPartition = 1L << 20
+
   /** STREAMING index maintenance (VERDICT r11 #7): a `foreachBatch`
     * sink that lands every micro-batch of (vec_id, v) rows through the
     * same assignment [[append]], so an embedding stream keeps the
@@ -727,44 +733,6 @@ object AnnIndex {
     * micro-batch costs O(batch) data + one marker, the same shape as
     * any commit-log entry.
     */
-  /** Raw input bytes per partition for a micro-batch's data-sized
-    * parallelism (r18, the [[MinhashSignatureStore]] idiom):
-    * foreachBatch plans run AQE-less, so every exchange inherits the
-    * session's static shuffle.partitions — dozens of near-empty tasks
-    * per job at small batch sizes. Embedding rows are wide and the
-    * per-row work (double dots) light relative to tokenization, so
-    * the divisor is larger than the minhash store's.
-    */
-  private def streamBytesPerPartition: Long =
-    java.lang.Long.getLong("graft.ann.bytes.per.partition", 1L << 20)
-
-  /** Scope one session conf around `body`, restoring after. */
-  private def withConfScoped[T](spark: SparkSession, key: String,
-      value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Data-sized (partition count, spread width) for a micro-batch —
-    * from the trigger's actual input bytes when file-backed, the
-    * session defaults otherwise.
-    */
-  private def batchSizing(spark: SparkSession,
-      batch: DataFrame): (Long, Int) = {
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val bytes = graft.streaming.Spread.inputBytes(batch)
-    val parts = if (bytes < 0) sessionParts
-      else math.max(1L, math.min(sessionParts,
-        bytes / streamBytesPerPartition + 1))
-    (parts,
-      math.min(spark.sparkContext.defaultParallelism.toLong, parts).toInt)
-  }
-
   def appendStream(stream: DataFrame, centroids: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     // mid-stream crash recovery threading, same as [[dedupStream]]:
@@ -785,11 +753,11 @@ object AnnIndex {
           // (ADVICE r16: two swap-lock acquisitions + marker listings
           // per micro-batch, the second always a no-op). Both the
           // spread width and the exchanges are data-sized (r18,
-          // [[batchSizing]]).
-          val spark = batch.sparkSession
-          val (parts, width) = batchSizing(spark, batch)
-          withConfScoped(spark, "spark.sql.shuffle.partitions",
-            parts.toString) {
+          // [[graft.streaming.Spread.batchSizing]]).
+          val (parts, width) = graft.streaming.Spread.batchSizing(batch,
+            StreamBytesPerPartition)
+          graft.SessionConf.withConf(batch.sparkSession,
+              "spark.sql.shuffle.partitions" -> parts.toString) {
             appendRecovered(graft.streaming.Spread.toWidth(batch, width),
               liveCents, path)
           }
@@ -928,11 +896,13 @@ object AnnIndex {
           // independent). Also the persist target: the micro-batch
           // feeds two actions (verdict write, kept append).
           // data-sized parallelism for the whole batch body (r18,
-          // [[batchSizing]]): AQE-less micro-batch plans otherwise run
-          // every exchange at the session's static width
-          val (parts, width) = batchSizing(spark, batch)
-          withConfScoped(spark, "spark.sql.shuffle.partitions",
-            parts.toString) {
+          // [[graft.streaming.Spread.batchSizing]]): AQE-less
+          // micro-batch plans otherwise run every exchange at the
+          // session's static width
+          val (parts, width) = graft.streaming.Spread.batchSizing(batch,
+            StreamBytesPerPartition)
+          graft.SessionConf.withConf(spark,
+              "spark.sql.shuffle.partitions" -> parts.toString) {
           val spread = graft.streaming.Spread.toWidth(batch, width)
           spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
@@ -1013,8 +983,7 @@ object AnnIndex {
     * outlives it (in-process writers are excluded by the root lock).
     */
   private def recoverForRead(spark: SparkSession, path: String): Option[DataFrame] =
-    recoverImpl(spark, path,
-      java.lang.Long.getLong("graft.swap.reader.grace.ms", 500L))
+    recoverImpl(spark, path, SwapCommit.ReaderGraceMs)
 
   private def recoverImpl(spark: SparkSession, path: String,
       graceMs: Long): Option[DataFrame] = {
@@ -1246,14 +1215,18 @@ object AnnIndex {
     // for the centroid count — free, no job); the fingerprint check
     // skips the write when a valid version already exists. Below the
     // limit: no job, no file, nothing changes.
-    if (cellCounts.size >
-        java.lang.Long.getLong("graft.ann.centroid.limit", 262144L) &&
+    if (cellCounts.size > setting(spark, CentroidLimitKey) &&
         readPersistedSupers(spark, path, centroids).isEmpty)
       persistSupers(spark, path, centroids,
         java.util.UUID.randomUUID().toString)
     optimizeImpl(spark, path, centroids, math.max(1L, policy(n)),
       Int.MaxValue, knownCounts = Some(cellCounts), knownIndex = knownIdx)
   }
+
+  /** Row bound under which [[optimizeImpl]]'s reorganization joins
+    * carry broadcast hints (see `bcastR` there).
+    */
+  private val ReorgBroadcastRowsLimit = 65536L
 
   /** cap ≈ ⌈√n⌉ — see [[optimizeIfOutgrown]]. */
   def defaultOccupancyPolicy(n: Long): Long =
@@ -1311,7 +1284,7 @@ object AnnIndex {
       .agg(max(col("cid")), max(size(col("c"))), count(lit(1))).head()
     val maxCid = idsRow.getLong(0)
     val dim = idsRow.getInt(1)
-    guardCentroidScale(idsRow.getLong(2))
+    guardCentroidScale(spark, idsRow.getLong(2))
     // driver-side split plan (scheduler-sized: one row per CHILD, and
     // children ≈ split rows / cap): k = ceil(n/cap) children per hot
     // cell; seed 0 at rank 1 of the parent-alignment ordering, seed
@@ -1341,10 +1314,8 @@ object AnnIndex {
     // plans at every scale the bench or the fixtures actually reach
     // (the driver-Seq frames seedSpecDf/subSpecDf stay hinted: they
     // are scheduler-sized by construction).
-    val reorgBound =
-      java.lang.Long.getLong("graft.ann.broadcast.rows.limit", 65536L)
-    val reorgSane =
-      idsRow.getLong(2) <= reorgBound && seedSpecs.size <= reorgBound
+    val reorgSane = idsRow.getLong(2) <= ReorgBroadcastRowsLimit &&
+      seedSpecs.size <= ReorgBroadcastRowsLimit
     def bcastR(df: DataFrame): DataFrame =
       if (reorgSane) broadcast(df) else df
     // members of split cells, scored against their OWN centroid — the
@@ -1523,7 +1494,7 @@ object AnnIndex {
     // the refreshed-centroid collect (ADVICE r16: guarding on
     // refreshedRows.size let one tiny-cap optimize call reach the
     // driver-memory event the guard exists to prevent)
-    guardCentroidScale(
+    guardCentroidScale(spark,
       idsRow.getLong(2) - hotCells.size + subSpecs.size)
     val sliceW = 4096L
     val thin = asg.select(col("cell"), col("child"), col("vec_id"))

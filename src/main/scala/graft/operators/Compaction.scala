@@ -76,7 +76,7 @@ object Compaction {
     // dynamic overwrite only for the duration of the rewrites — a
     // leaked session-wide 'dynamic' would change the semantics of a
     // caller's later intentional full-table overwrite
-    Deletes.withDynamicOverwrite(spark) {
+    graft.SessionConf.withConf(spark, Deletes.DynamicOverwrite) {
       flagged.toSeq.map { r =>
         val partDir = r.getString(0) // e.g. ingest_date=2024-01-03
         val Array(partCol, escaped) = partDir.split("=", 2)

@@ -81,12 +81,6 @@ object ConnectedComponents {
     *         id; only nodes that appear in an edge are returned (the
     *         caller left-joins and coalesces to cover singletons).
     */
-  /** Rounds the last [[run]] took to converge (the convergence round
-    * included) — diag instrumentation (VERDICT r17 #6): round count is
-    * the CC cost driver, so any tuning claim starts from this number.
-    */
-  @volatile private[graft] var lastRounds: Int = -1
-
   def run(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
     var (e, prev) = materialize(edges
       .select(col("u").cast(LongType), col("v").cast(LongType))
@@ -101,7 +95,6 @@ object ConnectedComponents {
       prev = cur
       round += 1
     }
-    lastRounds = round
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds")

@@ -20,20 +20,13 @@ import org.apache.spark.sql.functions._
   */
 object Deletes {
 
-  /** Scope `spark.sql.sources.partitionOverwriteMode=dynamic` to one
-    * block, restoring the previous setting after (shared discipline
-    * with [[Compaction.compact]] — a leaked 'dynamic' changes the
-    * semantics of a caller's later intentional static overwrite).
+  /** Dynamic partition overwrite, scoped with [[graft.SessionConf.withConf]]
+    * around each rewrite here and in [[Compaction.compact]]: a leaked
+    * 'dynamic' changes the semantics of a caller's later intentional
+    * static overwrite.
     */
-  private[operators] def withDynamicOverwrite[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f finally prev match {
-      case Some(m) => spark.conf.set(key, m)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private[operators] val DynamicOverwrite =
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
 
   /** Delete every row of `tableDir` whose `keyCol` appears in `keys`
     * (a one-column frame named `keyCol`). Returns the partition values
@@ -65,7 +58,7 @@ object Deletes {
     // its old files. Split: rewrite survivors, rm emptied directories.
     val surviving = remaining.select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSet
-    if (surviving.nonEmpty) withDynamicOverwrite(spark) {
+    if (surviving.nonEmpty) graft.SessionConf.withConf(spark, DynamicOverwrite) {
       remaining.write.mode("overwrite").partitionBy(partCol).parquet(tableDir)
     }
     val fs = new org.apache.hadoop.fs.Path(tableDir)

@@ -102,29 +102,27 @@ object MinhashSignatureStore {
     */
   val BandBuckets = 64
 
+  private val BucketTargetRows = 65536L
+
+  private val MaxBuckets = 4096L
+
   /** Bucket count for a layout holding `bandRows` rows: one bucket
-    * per [[bucketTargetRows]], floored at 1, capped at
-    * `graft.store.max.buckets` (4096 default — at the default target
-    * that is ~270M band rows before buckets saturate; a 100 TB
-    * deployment raises both knobs together like bucketed-table DDL).
+    * per [[BucketTargetRows]], floored at 1, capped at [[MaxBuckets]]
+    * (at the target that is ~270M band rows before buckets saturate;
+    * a 100 TB deployment raises both together like bucketed-table
+    * DDL).
     */
   private def bucketsFor(bandRows: Long): Int =
-    math.max(1L, math.min(
-      java.lang.Long.getLong("graft.store.max.buckets", 4096L),
-      bandRows / bucketTargetRows + 1)).toInt
-
-  private def bucketTargetRows: Long =
-    java.lang.Long.getLong("graft.store.rows.per.bucket", 65536L)
+    math.max(1L, math.min(MaxBuckets, bandRows / BucketTargetRows + 1)).toInt
 
   /** Target rows per staged docs file (r18): the docs side of a batch
     * is written `coalesce`d to ⌈staged docs / this⌉ files (capped at
     * the session parallelism) instead of one near-empty file per
     * shuffle partition — a small-batch append stages 1 docs file, not
     * 32, and every later probe's docs scan lists that many fewer
-    * files. Sysprop-tunable for deployments with bigger batches.
+    * files.
     */
-  private def docsRowsPerFile: Long =
-    java.lang.Long.getLong("graft.store.docs.rows.per.file", 65536L)
+  private val DocsRowsPerFile = 65536L
 
   private def fs(spark: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
@@ -328,26 +326,16 @@ object MinhashSignatureStore {
     }
   }
 
-  /** Cross-process reader grace: how long a READER entry point waits
-    * for a live writer in another process to finish its own
-    * roll-forward before treating the marker as a crashed writer's
-    * (in-process writers are excluded by the lock, so the wait only
-    * ever triggers cross-process — or after a real crash, where it is
-    * the recovery latency). Tunable for tests / impatient deployments.
-    */
-  private def readerGraceMs: Long =
-    java.lang.Long.getLong("graft.swap.reader.grace.ms", 500L)
-
   /** Reader-entry recovery (ADVICE r13): same roll-forward guarantee
     * as [[recover]], but a pending marker is presumed to belong to a
-    * LIVE writer first — wait [[readerGraceMs]] for it to clear, and
-    * only recover a marker that outlives the grace.
+    * LIVE writer first — wait [[SwapCommit.ReaderGraceMs]] for it to
+    * clear, and only recover a marker that outlives the grace.
     */
   private def recoverForRead(spark: SparkSession, storeDir: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(storeDir)
     val f = fs(spark, storeDir)
     SwapCommit.withLock(root) {
-      SwapCommit.awaitPending(f, root, CommitMarker, readerGraceMs)
+      SwapCommit.awaitPending(f, root, CommitMarker, SwapCommit.ReaderGraceMs)
         .foreach(applyPending(f, root, _))
     }
   }
@@ -475,7 +463,7 @@ object MinhashSignatureStore {
       // with a non-empty token set emits exactly nBands band rows).
       val docFiles = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
-        bandsDelta / nBands / docsRowsPerFile + 1))
+        bandsDelta / nBands / DocsRowsPerFile + 1))
       arrs.coalesce(docFiles.toInt)
         .write.mode("overwrite").parquet(s"$staging/docs")
       stageRows(f, new org.apache.hadoop.fs.Path(staging), bandsDelta)
@@ -624,7 +612,7 @@ object MinhashSignatureStore {
         .parquet(s"$staging/bands")
       val docFiles = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
-        nDocs / docsRowsPerFile + 1))
+        nDocs / DocsRowsPerFile + 1))
       arrs.coalesce(docFiles.toInt)
         .write.mode("overwrite").parquet(s"$staging/docs")
       val out = f.create(new org.apache.hadoop.fs.Path(staging, "scheme"), true)
@@ -725,15 +713,11 @@ object MinhashSignatureStore {
           // drops to what the data justifies, so it is scale-adaptive,
           // not a local-mode constant. Non-file sources (inputBytes
           // -1) keep the session default.
-          val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-          val batchBytes = graft.streaming.Spread.inputBytes(batch)
-          val parts = if (batchBytes < 0) sessionParts
-            else math.max(1L, math.min(sessionParts,
-              batchBytes / probeBytesPerPartition + 1))
-          withConfScoped(spark, "spark.sql.shuffle.partitions",
-            parts.toString) {
-          val spread = graft.streaming.Spread.toWidth(batch,
-            math.min(spark.sparkContext.defaultParallelism.toLong, parts).toInt)
+          val (parts, width) = graft.streaming.Spread.batchSizing(batch,
+            ProbeBytesPerPartition)
+          graft.SessionConf.withConf(spark,
+              "spark.sql.shuffle.partitions" -> parts.toString) {
+          val spread = graft.streaming.Spread.toWidth(batch, width)
           spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           // ONE writer-entry recovery + staging GC + scheme read per
           // micro-batch (r18, guide §1.2): the probe's reader-grace
@@ -830,36 +814,20 @@ object MinhashSignatureStore {
     * same session would momentarily see the smaller advisory — a
     * few extra tasks, never a wrong plan.
     */
-  private def candidateAdvisoryBytes: String =
-    sys.props.getOrElse("graft.probe.advisory.bytes", "8m")
+  private val CandidateAdvisory =
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m"
 
   /** Raw input bytes per partition for a micro-batch's data-sized
     * parallelism ([[dedupStream]], r18): text work (tokenize +
     * signatures) is CPU-heavy per byte, so the divisor is small —
-    * 256 KB keeps those tasks tens-of-ms-sized while a kilobyte-scale
+    * 256 KiB keeps those tasks tens-of-ms-sized while a kilobyte-scale
     * trigger collapses to a handful of partitions instead of the
-    * session's static width. Sysprop-tunable per deployment.
+    * session's static width.
     */
-  private def probeBytesPerPartition: Long =
-    java.lang.Long.getLong("graft.probe.bytes.per.partition", 262144L)
-
-  /** Set one session conf for the duration of `body`, restoring the
-    * caller's value (or unsetting) after.
-    */
-  private def withConfScoped[T](spark: SparkSession, key: String,
-      value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private val ProbeBytesPerPartition = 256L << 10
 
   private def withAdvisoryCap[T](spark: SparkSession)(body: => T): T =
-    withConfScoped(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      candidateAdvisoryBytes)(body)
+    graft.SessionConf.withConf(spark, CandidateAdvisory)(body)
 
   /** The batch-vocabulary strategy probe: distinct token count of the
     * CACHED batch frame, clamped at 1025 (all the mask ladder needs
@@ -1171,9 +1139,8 @@ object MinhashSignatureStore {
     val parts = math.max(
       spark.conf.get("spark.sql.shuffle.partitions").toLong,
       math.min(4096L, candidates / PairsPerStaticPartition + 1)).toString
-    withConfScoped(spark, "spark.sql.shuffle.partitions", parts) {
-      withAdvisoryCap(spark)(body)
-    }
+    graft.SessionConf.withConf(spark,
+      "spark.sql.shuffle.partitions" -> parts, CandidateAdvisory)(body)
   }
 
   /** [[dedupAgainst]] as one lazy plan — what the plan-shape specs

@@ -94,6 +94,15 @@ private[graft] object SwapCommit {
     }
   }
 
+  /** Cross-process reader grace: how long a READER entry point of
+    * either store waits in [[awaitPending]] for a live writer in
+    * another process to finish its own roll-forward before treating
+    * the marker as a crashed writer's (in-process writers are excluded
+    * by [[withLock]], so the wait only ever triggers cross-process — or
+    * after a real crash, where it is the recovery latency).
+    */
+  val ReaderGraceMs = 500L
+
   /** Reader-side recovery gate: if a marker is pending, poll up to
     * `graceMs` for it to clear — a live writer (in another process;
     * [[withLock]] already serializes local ones) finishes its own

@@ -3100,33 +3100,11 @@ object Extras {
     * ROUTES two-level, and the descent width set to k₂ = ⌈√16⌉ = 4 —
     * covering, so every cell is a candidate and the probe must be
     * BIT-IDENTICAL to the flat ranking. The oracle is therefore x65's
-    * own SQL (plus the constant routed flag, captured at plan
-    * construction where the router runs): the plan changed, the
-    * contract did not, and DuckDB now gates that sentence. The
-    * sysprops are scoped to plan construction — the route decision
-    * and the memoized super frames are fixed into the plan, so later
-    * re-execution (bench reps, Verify's write) replays the same path.
+    * own SQL (plus the constant routed flag): the plan changed, the
+    * contract did not, and DuckDB now gates that sentence.
     */
-  def x82AnnTwoLevel(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-    val cents = e.filter($"vec_id".between(1, 16))
-      .select($"vec_id".as("cid"), $"v".as("c"))
-    val path = scratchDir(s, "x82", dir) + "/index"
-    graft.operators.AnnIndex.build(e.filter($"vec_id" =!= 0), cents, path)
-    val probes = e.filter($"vec_id" === 0).select($"vec_id".as("p_id"), $"v".as("p"))
-    val (res, routed) = try {
-      System.setProperty("graft.ann.centroid.limit", "4")
-      System.setProperty("graft.ann.nsuper", "4")
-      val r = graft.operators.AnnIndex.probe(s, path, probes, cents,
-        nprobe = 2, k = 5)
-      (r, graft.operators.AnnIndex.lastRankingTwoLevel)
-    } finally {
-      System.clearProperty("graft.ann.centroid.limit")
-      System.clearProperty("graft.ann.nsuper")
-    }
-    res.withColumn("routed", lit(routed))
-  }
+  def x82AnnTwoLevel(s: SparkSession, dir: String): DataFrame =
+    annTwoLevel(s, dir, "x82", nsuper = 4)
 
   /** x83 — the two-level NARROW descent, hash-gated: same forced
     * route but nsuper = 1, so only the probe's best super-cell's
@@ -3142,25 +3120,32 @@ object Extras {
     * two-level chain — seed choice, membership tie, sum order, level-1
     * rank — hash-mismatches.
     */
-  def x83AnnTwoLevelNarrow(s: SparkSession, dir: String): DataFrame = {
+  def x83AnnTwoLevelNarrow(s: SparkSession, dir: String): DataFrame =
+    annTwoLevel(s, dir, "x83", nsuper = 1)
+
+  /** x82/x83's shared body: x65's index and probe with the session's
+    * centroid limit at 4 (under the 16-cell set) and the descent width
+    * at `nsuper`, plus the router's verdict as the `routed` column. The
+    * two session settings are scoped to plan construction — the route
+    * decision and the memoized super frames are fixed into the plan,
+    * so later re-execution (bench reps, Verify's write) replays the
+    * same path.
+    */
+  private def annTwoLevel(s: SparkSession, dir: String, key: String,
+      nsuper: Int): DataFrame = {
     import s.implicits._
+    val ann = graft.operators.AnnIndex
     val e = emb(s, dir)
     val cents = e.filter($"vec_id".between(1, 16))
       .select($"vec_id".as("cid"), $"v".as("c"))
-    val path = scratchDir(s, "x83", dir) + "/index"
-    graft.operators.AnnIndex.build(e.filter($"vec_id" =!= 0), cents, path)
+    val path = scratchDir(s, key, dir) + "/index"
+    ann.build(e.filter($"vec_id" =!= 0), cents, path)
     val probes = e.filter($"vec_id" === 0).select($"vec_id".as("p_id"), $"v".as("p"))
-    val (res, routed) = try {
-      System.setProperty("graft.ann.centroid.limit", "4")
-      System.setProperty("graft.ann.nsuper", "1")
-      val r = graft.operators.AnnIndex.probe(s, path, probes, cents,
-        nprobe = 2, k = 5)
-      (r, graft.operators.AnnIndex.lastRankingTwoLevel)
-    } finally {
-      System.clearProperty("graft.ann.centroid.limit")
-      System.clearProperty("graft.ann.nsuper")
+    graft.SessionConf.withConf(s,
+        ann.CentroidLimitKey -> "4", ann.NsuperKey -> nsuper.toString) {
+      ann.probe(s, path, probes, cents, nprobe = 2, k = 5)
+        .withColumn("routed", lit(ann.routesTwoLevel(cents)))
     }
-    res.withColumn("routed", lit(routed))
   }
 
   /** x70 — STREAMING index maintenance (ANN × H, VERDICT r11 #7):
@@ -3379,6 +3364,8 @@ object Extras {
       (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
     }
 
+  private val ParallelProbeBandsLimit = 65536L
+
   /** Route the two probe legs concurrent vs sequential from the
     * store's `_bands_rows` commit metadata (one tiny driver read,
     * zero Spark jobs — the only store-size signal that costs nothing
@@ -3389,14 +3376,13 @@ object Extras {
     * two census candidate exchanges in flight TOGETHER doubled peak
     * execution memory and OOM'd the 8 GB sf10 sweep this round. So:
     * concurrent iff the metadata says the store is under
-    * `-Dgraft.probe.parallel.bands.limit` (65536 band rows ≈ a
-    * ≤16k-doc store at the (16,4) scheme); absent metadata (legacy
-    * store) routes sequential — the conservative, sweep-proven path.
+    * [[ParallelProbeBandsLimit]] band rows (≈ a ≤16k-doc store at the
+    * (16,4) scheme); absent metadata (legacy store) routes sequential
+    * — the conservative, sweep-proven path.
     */
   private def smallStoreProbe(s: SparkSession, storeDir: String): Boolean =
     graft.operators.MinhashSignatureStore.storedBandsRows(s, storeDir)
-      .exists(_ <= java.lang.Long.getLong(
-        "graft.probe.parallel.bands.limit", 65536L))
+      .exists(_ <= ParallelProbeBandsLimit)
 
   def x71IncrementalMinhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -50,4 +50,23 @@ object Spread {
         }.sum
       }
     } catch { case _: Exception => -1L }
+
+  /** Data-sized (shuffle partitions, spread width) for a micro-batch
+    * (r18): one partition per `bytesPerPartition` of the trigger's
+    * [[inputBytes]], capped at the session's shuffle.partitions; the
+    * width is that count capped at the default parallelism.
+    * foreachBatch plans run AQE-less, so every exchange otherwise
+    * inherits the session's static width — dozens of near-empty tasks
+    * per job at small batch sizes. A non-file-backed batch keeps the
+    * session's partition count.
+    */
+  def batchSizing(batch: DataFrame, bytesPerPartition: Long): (Int, Int) = {
+    val spark = batch.sparkSession
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bytes = inputBytes(batch)
+    val parts = if (bytes < 0) sessionParts
+      else math.max(1L, math.min(sessionParts.toLong,
+        bytes / bytesPerPartition + 1)).toInt
+    (parts, math.min(spark.sparkContext.defaultParallelism, parts))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SessionConf.withConf
 import graft.operators.AnnIndex
 
 /** Disk-backed IVF index: layout, partition-pruned probing, and
@@ -76,17 +77,15 @@ class AnnIndexSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
         .sorted
     val flat = run()
-    assert(!AnnIndex.lastRankingTwoLevel, "default limit must rank flat")
+    assert(!AnnIndex.routesTwoLevel(centroids), "default limit must rank flat")
     // force the route: limit 4 < 8 cells; k2 = ceil(sqrt(8)) = 3
     // super-centroids; nsuper = 3 covers every super, so the candidate
     // CELL set is complete and the shared tie rules make the output
     // bit-identical to the flat ranking — the plan changed, the
     // contract did not
-    System.setProperty("graft.ann.centroid.limit", "4")
-    System.setProperty("graft.ann.nsuper", "3")
-    try {
+    withConf(spark, AnnIndex.CentroidLimitKey -> "4", AnnIndex.NsuperKey -> "3") {
       val two = run()
-      assert(AnnIndex.lastRankingTwoLevel,
+      assert(AnnIndex.routesTwoLevel(centroids),
         "a 4-cell limit must route an 8-cell set two-level")
       assert(two == flat,
         s"covering two-level ranking must equal the flat ranking:\n$two\nvs\n$flat")
@@ -94,37 +93,75 @@ class AnnIndexSpec extends AnyFunSuite {
       // agree row for row) and still k results per probe — the only
       // contract change is WHICH cells are candidates, the level-1
       // analog of nprobe
-      System.setProperty("graft.ann.nsuper", "1")
-      val narrow1 = run()
-      val narrow2 = run()
-      assert(narrow1 == narrow2, "narrow descent must be deterministic")
-      assert(narrow1.groupBy(_._1).forall(_._2.size == 5),
-        "narrow descent still returns k hits per probe on a covered index")
-    } finally {
-      System.clearProperty("graft.ann.centroid.limit")
-      System.clearProperty("graft.ann.nsuper")
+      withConf(spark, AnnIndex.NsuperKey -> "1") {
+        val narrow1 = run()
+        val narrow2 = run()
+        assert(narrow1 == narrow2, "narrow descent must be deterministic")
+        assert(narrow1.groupBy(_._1).forall(_._2.size == 5),
+          "narrow descent still returns k hits per probe on a covered index")
+      }
     }
+  }
+
+  test("the ANN settings are per session: on one context, the session " +
+      "with a 4-cell limit routes two-level, its sibling routes flat, " +
+      "and both return the covering result") {
+    val routed = spark.newSession()
+    val plain = spark.newSession()
+    routed.conf.set(AnnIndex.CentroidLimitKey, "4")
+    def probeOn(s: org.apache.spark.sql.SparkSession) = {
+      val v = s.read.parquet(s"$sf/embeddings.parquet")
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      val cents = v.filter(col("vec_id").between(1, 8))
+        .select(col("vec_id").as("cid"), col("v").as("c"))
+      val probes = v.filter(col("vec_id").between(20, 24))
+        .select(col("vec_id").as("p_id"), col("v").as("p"))
+      val out = AnnIndex.probe(s, indexPath, probes, cents, nprobe = 2, k = 5)
+      // the two-level ranking joins checkpointed super frames into the
+      // plan; the flat ranking has no RDD leaf at all
+      val superLeaf = out.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      val rows = out.select(col("p_id").cast("long"), col("rank").cast("long"),
+          col("vec_id").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        .sorted
+      (AnnIndex.routesTwoLevel(cents), superLeaf, rows)
+    }
+    val (routedTwo, routedLeaf, routedRows) = probeOn(routed)
+    val (plainTwo, plainLeaf, plainRows) = probeOn(plain)
+    assert(routedTwo && routedLeaf, "the limited session must route two-level")
+    assert(!plainTwo && !plainLeaf,
+      "a sibling session must not see the other session's limit")
+    assert(routedRows.nonEmpty && routedRows == plainRows,
+      "covering two-level and flat rankings must return the same rows")
+    assert(spark.conf.getOption(AnnIndex.CentroidLimitKey).isEmpty,
+      "the parent session must not see a child session's setting")
   }
 
   test("probe above the IN-list limit switches to a broadcast-semi DPP " +
       "filter with identical results (VERDICT r14 #4)") {
-    val probes = vectors.filter(col("vec_id").between(20, 22))
-      .select(col("vec_id").as("p_id"), col("v").as("p"))
-    val viaIsin = AnnIndex.probe(spark, indexPath, probes, centroids,
-        nprobe = 2, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    System.setProperty("graft.ann.isin.limit", "0")
-    try {
-      val out = AnnIndex.probe(spark, indexPath, probes, centroids,
-        nprobe = 2, k = 5)
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning"),
-        "the join fallback must arm dynamic partition pruning on the " +
-          s"cell scan:\n$plan")
-      val got = out.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == viaIsin, "both pruning paths must return the same rows")
-    } finally System.clearProperty("graft.ann.isin.limit")
+    val index = spark.read.parquet(indexPath)
+    val cellIds = Seq(2L, 5L, 7L)
+    // the probe paths join the pruned scan to their ranked cells; that
+    // join (its filtered side) is what DPP keys on, so the fallback
+    // must leave the scan's cell column a bare attribute for it
+    val wanted = centroids.select(col("cid").cast("long").as("cid"))
+      .filter(col("cid").isin(cellIds: _*))
+    def scan(isinLimit: Int) = wanted.join(
+      AnnIndex.wantedCellScan(index, cellIds, isinLimit), col("cid") === col("cell"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id").cast("long"), col("cell").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaIsin = rows(scan(256))
+    val out = scan(0)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("dynamicpruning"),
+      "the join fallback must arm dynamic partition pruning on the " +
+        s"cell scan:\n$plan")
+    val got = rows(out)
+    assert(got.nonEmpty && got == viaIsin,
+      "both pruning paths must return the same rows")
   }
 
   test("append lands in the right cells and probes see it without rebuild") {
@@ -669,8 +706,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // optimize must refuse LOUDLY before touching the layout (a 100 TB
     // corpus under a fixed cap walks into this — the error names the
     // policy and the two-level-quantizer escape hatch)
-    System.setProperty("graft.ann.centroid.limit", "4")
-    try {
+    withConf(spark, AnnIndex.CentroidLimitKey -> "4") {
       val ex = intercept[RuntimeException] {
         AnnIndex.optimize(spark, p, refreshed, maxOccupancy = 2L)
       }
@@ -678,7 +714,7 @@ class AnnIndexSpec extends AnyFunSuite {
         ex.getMessage.contains("two-level"),
         s"guard message must name the escape hatches: ${ex.getMessage}")
       assert(occOf(p) == occ, "the guard must fire before any rewrite")
-    } finally System.clearProperty("graft.ann.centroid.limit")
+    }
   }
 
   test("optimizeIfOutgrown's fused single-read recount (r17) produces " +

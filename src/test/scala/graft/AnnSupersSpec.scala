@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SessionConf.withConf
 import graft.operators.AnnIndex
 
 /** Two-level super assignment: construction-path identity and the
@@ -40,32 +41,54 @@ class AnnSupersSpec extends AnyFunSuite {
   private def freshProbes = vectors.filter(col("vec_id").between(20, 24))
     .select(col("vec_id").as("p_id"), col("v").as("p"))
 
+  /** The probe's rows, and whether its ranking read persisted supers:
+    * those are a parquet scan under `_supers/`, while constructed
+    * supers are a localCheckpoint with no input file.
+    */
   private def runProbe(path: String,
-      cents: DataFrame): Seq[(Long, Long, Long)] =
-    AnnIndex.probe(spark, path, freshProbes, cents, nprobe = 2, k = 5)
-      .select(col("p_id").cast("long"), col("rank").cast("long"),
+      cents: DataFrame): (Seq[(Long, Long, Long)], Boolean) = {
+    val res = AnnIndex.probe(spark, path, freshProbes, cents, nprobe = 2, k = 5)
+    (res.select(col("p_id").cast("long"), col("rank").cast("long"),
         col("vec_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq.sorted
+      .toSeq.sorted,
+      res.inputFiles.exists(_.contains("/_supers/")))
+  }
 
   test("direct membership argmax ≡ assign's pruned argmax: the " +
       "construction gate cannot change a two-level probe") {
     val path = java.nio.file.Files.createTempDirectory("graft-supers-gate")
       .toString + "/index"
     AnnIndex.build(vectors, freshCentroids, path)
-    System.setProperty("graft.ann.centroid.limit", "4")
-    try {
-      val direct = runProbe(path, freshCentroids) // 8×3 pairs ≤ default gate
-      assert(AnnIndex.lastRankingTwoLevel, "8 cells over limit 4 must route")
-      assert(!AnnIndex.lastSupersFromLayout, "no persisted supers here")
-      System.setProperty("graft.ann.supers.direct.pairs", "0")
-      val viaAssign = runProbe(path, freshCentroids)
-      assert(viaAssign == direct,
-        s"construction paths must agree:\n$direct\nvs\n$viaAssign")
-    } finally {
-      System.clearProperty("graft.ann.centroid.limit")
-      System.clearProperty("graft.ann.supers.direct.pairs")
+    withConf(spark, AnnIndex.CentroidLimitKey -> "4") {
+      val cents = freshCentroids
+      val (rows, fromLayout) = runProbe(path, cents)
+      assert(AnnIndex.routesTwoLevel(cents), "8 cells over limit 4 must route")
+      assert(!fromLayout, "no persisted supers here")
+      assert(rows.groupBy(_._1).forall(_._2.size == 5),
+        "the two-level probe returns k hits per probe")
     }
+    // the probe's ranking is a function of (superOf, superCents) alone,
+    // so the gate cannot change it iff both construction paths give
+    // the same rows: k2 = ⌈√8⌉ = 3, and 8×3 pairs ≤ the default gate
+    // takes the direct aggregate, directPairs = 0 the assign path
+    def ofRows(so: DataFrame) =
+      so.select(col("cid").cast("long"), col("sid").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def centRows(sc: DataFrame) =
+      sc.select(col("cid").cast("long"), col("c"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
+    val (directSo, directSc) = AnnIndex.computeSupers(freshCentroids, 3)
+    val (assignSo, assignSc) =
+      AnnIndex.computeSupers(freshCentroids, 3, directPairs = 0L)
+    val (directOf, directCents) = (ofRows(directSo), centRows(directSc))
+    val (assignOf, assignCents) = (ofRows(assignSo), centRows(assignSc))
+    assert(directOf.size == 8 && directCents.size == 3,
+      s"every cell in one of 3 supers: $directOf")
+    assert(assignOf == directOf,
+      s"construction paths must agree on superOf:\n$directOf\nvs\n$assignOf")
+    assert(assignCents == directCents,
+      "construction paths must agree on superCents")
   }
 
   test("maintenance persists supers past the routing limit; probes read " +
@@ -79,11 +102,11 @@ class AnnSupersSpec extends AnyFunSuite {
     // 100 TB no-op window that runs before optimize's loud scale
     // guard) persists the super assignment into the layout
     AnnIndex.build(vectors, freshCentroids, path)
-    System.setProperty("graft.ann.centroid.limit", "5")
-    try {
-      val constructed = runProbe(path, freshCentroids)
-      assert(AnnIndex.lastRankingTwoLevel, "8 cells over limit 5 must route")
-      assert(!AnnIndex.lastSupersFromLayout, "nothing persisted yet")
+    withConf(spark, AnnIndex.CentroidLimitKey -> "5") {
+      val cents = freshCentroids
+      val (constructed, constructedFromLayout) = runProbe(path, cents)
+      assert(AnnIndex.routesTwoLevel(cents), "8 cells over limit 5 must route")
+      assert(!constructedFromLayout, "nothing persisted yet")
 
       AnnIndex.optimizeIfOutgrown(spark, path, freshCentroids,
         policy = _ => Long.MaxValue)
@@ -103,22 +126,21 @@ class AnnSupersSpec extends AnyFunSuite {
 
       // a fresh frame of the same set (content-fingerprint match)
       // probes via the persisted supers, bit-identically
-      val fromLayout = runProbe(path, freshCentroids)
-      assert(AnnIndex.lastSupersFromLayout,
-        "a matching persisted version must be used")
+      val (fromLayout, usedLayout) = runProbe(path, freshCentroids)
+      assert(usedLayout, "a matching persisted version must be used")
       assert(fromLayout == constructed,
         "persisted supers must reproduce the constructed ranking")
 
       // a DIFFERENT centroid set must not match the fingerprint
       val narrower = freshCentroids.filter(col("cid") <= 7)
-      val stale = runProbe(path, narrower)
-      assert(AnnIndex.lastRankingTwoLevel && !AnnIndex.lastSupersFromLayout,
+      val (_, staleFromLayout) = runProbe(path, narrower)
+      assert(AnnIndex.routesTwoLevel(narrower) && !staleFromLayout,
         "another set's persisted supers must be rejected")
 
       // torn version (meta deleted mid-crash): construct, same rows
       assert(new java.io.File(versions.head, "_meta").delete())
-      val afterTear = runProbe(path, freshCentroids)
-      assert(!AnnIndex.lastSupersFromLayout, "torn version must not be read")
+      val (afterTear, tornFromLayout) = runProbe(path, freshCentroids)
+      assert(!tornFromLayout, "torn version must not be read")
       assert(afterTear == constructed,
         "fallback construction must reproduce the ranking")
 
@@ -126,8 +148,6 @@ class AnnSupersSpec extends AnyFunSuite {
       AnnIndex.build(vectors, freshCentroids, path)
       assert(!home.isDirectory,
         "build must delete persisted supers")
-    } finally {
-      System.clearProperty("graft.ann.centroid.limit")
     }
   }
 }
