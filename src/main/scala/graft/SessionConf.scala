@@ -12,10 +12,14 @@ object SessionConf {
 
   /** Run `body` with every `key -> value` set on `spark`'s conf, then
     * restore each key's previous value, or unset it if it had none.
+    * "Had none" is read from `getAll`, the explicitly set keys:
+    * `getOption` returns a registered key's default, and restoring that
+    * would leave the key explicitly set.
     */
   def withConf[T](spark: SparkSession, settings: (String, String)*)(
       body: => T): T = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {

@@ -83,10 +83,10 @@ object Bronze {
     * (dynamic partition overwrite ≈ the reference's whole-file
     * overwrite A5).
     */
-  def writePartitioned(df: DataFrame, path: String, dateCol: String = "ingest_date"): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(dateCol).parquet(path)
-  }
+  def writePartitioned(df: DataFrame, path: String, dateCol: String = "ingest_date"): Unit =
+    graft.SessionConf.withConf(df.sparkSession, graft.operators.Deletes.DynamicOverwrite) {
+      df.write.mode("overwrite").partitionBy(dateCol).parquet(path)
+    }
 
   /** Write a silver table bucketed (+sorted) on its join key: two
     * tables bucketed the same way join with NO exchange — the

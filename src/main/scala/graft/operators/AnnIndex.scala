@@ -559,9 +559,10 @@ object AnnIndex {
   }
 
   /** Per-cell RAW row-count commit metadata (r18, VERDICT r17 #3 —
-    * the `_bands_rows` idiom applied to the index): build seeds it,
-    * append/optimize maintain it, and [[optimizeIfOutgrown]]'s policy
-    * recount becomes one tiny driver-side file read instead of a
+    * an exact-or-absent sidecar, the idiom the signature store used
+    * before its row count moved into its SnapshotLog commits): build
+    * seeds it, append/optimize maintain it, and [[optimizeIfOutgrown]]'s
+    * policy recount becomes one tiny driver-side file read instead of a
     * full-index aggregate per maintenance call (at 100 TB, a listing
     * + scan of the whole index between every batch).
     *
@@ -1248,8 +1249,7 @@ object AnnIndex {
     recover(spark, path) // roll forward any crashed predecessor's swap
     // aborted pre-commit staging (a predecessor that crashed before
     // publishing its marker) is dead weight — GC it here, the writer
-    // entry point, exactly like the signature store does (single-
-    // writer contract makes this safe)
+    // entry point (single-writer contract makes this safe)
     SwapCommit.gcOrphans(
       new org.apache.hadoop.fs.Path(path).getFileSystem(
         spark.sparkContext.hadoopConfiguration),

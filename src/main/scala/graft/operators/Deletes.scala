@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
 object Deletes {
 
   /** Dynamic partition overwrite, scoped with [[graft.SessionConf.withConf]]
-    * around each rewrite here and in [[Compaction.compact]]: a leaked
-    * 'dynamic' changes the semantics of a caller's later intentional
-    * static overwrite.
+    * around each rewrite here, in [[Compaction.compact]] and in
+    * [[graft.ingest.Bronze.writePartitioned]]: a leaked 'dynamic'
+    * changes the semantics of a caller's later intentional static
+    * overwrite.
     */
-  private[operators] val DynamicOverwrite =
+  private[graft] val DynamicOverwrite =
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
 
   /** Delete every row of `tableDir` whose `keyCol` appears in `keys`

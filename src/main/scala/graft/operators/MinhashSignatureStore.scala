@@ -16,24 +16,29 @@ import graft.functions.TextFns
   * lifted from exact ids to the x02 near-dup contract (Jaccard ≥ t on
   * the token set).
   *
-  * Store layout at `storeDir`:
-  *  - `_scheme` — `"nHashes,nBands"`, pinned at [[build]] time. LSH
-  *    band keys are only comparable under ONE scheme, so the store
-  *    fixes it for its lifetime; growing the corpus into the next
-  *    occupancy regime (x02's `minhashSchemeFor`) is a REBUILD, not an
-  *    append — the moment to re-band is a compaction decision, exactly
-  *    like re-bucketing a bucketed table.
+  * Store layout at `storeDir`: two [[SnapshotLog]] tables.
   *  - `docs/` — (doc_id, arr: sorted distinct tokens, sz): the exact-
   *    verify side. The store is O(corpus token sets) on disk; what the
   *    signature store buys is not storage, it is RUN cost — per batch,
   *    history contributes one column-pruned scan and zero shuffle.
-  *  - `bands/` — (band, sig: array<long>, doc_id) partitioned by
-  *    `bkt = hash(band, sig) mod 64`: the candidate side. Partitioning
-  *    by a key-derived bucket makes the probe's band join dynamic-
-  *    partition-prunable: a small batch touches few buckets, and the
-  *    store scan skips the rest (the [[AnnIndex.probe]] precedent,
-  *    with DPP instead of a driver-collected static filter since the
-  *    pruning key is simply part of the equi-join key).
+  *  - `bands/` — (doc_id, band, sig: array<long>) partitioned by
+  *    `bkt = hash(band, sig) mod buckets`: the candidate side.
+  *    Partitioning by a key-derived bucket makes the probe's band join
+  *    dynamic-partition-prunable: a small batch touches few buckets,
+  *    and the store scan skips the rest (the [[AnnIndex.probe]]
+  *    precedent, with DPP instead of a driver-collected static filter
+  *    since the pruning key is simply part of the equi-join key).
+  *
+  * The bands head is the store's ONE commit point. Its table
+  * properties pin the layout: `nHashes` and `nBands` (LSH band keys
+  * are only comparable under one scheme, so growing the corpus into
+  * the next occupancy regime — x02's `minhashSchemeFor` — is a
+  * [[rebuild]], not an append; the moment to re-band is a compaction
+  * decision, exactly like re-bucketing a bucketed table), `buckets`
+  * (the bkt fan-out, sized from the data at build/rebuild) and
+  * `docs_version`, the docs version those bands cover. Its per-file
+  * row counts give the exact bands row count the probe sizing needs,
+  * with no listing and no footer open.
   *
   * Probe dataflow ([[dedupAgainst]]) — the store side is NEVER
   * shuffled, the 100 TB invariant:
@@ -52,55 +57,34 @@ import graft.functions.TextFns
   *     order-free, so the batch rule is replayable in SQL).
   *
   * [[append]] adds a batch (the caller passes its KEPT docs) as new
-  * files under the same layout — O(batch) work, history untouched.
-  * Doc ids must be unique across the store's lifetime (the lake's own
-  * id contract); a doc re-appended under its own id is additionally
+  * files in both tables — O(batch) work, history untouched. Doc ids
+  * must be unique across the store's lifetime (the lake's own id
+  * contract); a doc re-appended under its own id is additionally
   * guarded by the d1 ≠ d2 filter, so re-probing an already-ingested
   * batch is idempotent rather than self-matching.
   *
-  * The two table writes commit ATOMICALLY (VERDICT r12 #3): both land
-  * in a staging dir, a [[SwapCommit]] marker publishes the pair as
-  * one commit point, and the roll-forward merges the staged files
-  * into the live dirs. A crash before the marker leaves the live
-  * store byte-identical (the orphaned staging is GC'd by the next
-  * writer); a crash after it is completed by [[recover]], which every
-  * entry point runs — so a probe sees a batch's bands AND docs rows,
-  * or neither. Never a torn batch.
+  * Commit protocol: every writer commits docs FIRST, then bands with
+  * `docs_version` set to that docs commit; every reader resolves the
+  * bands head ONCE and reads docs at its `docs_version`. A crash
+  * between the two commits therefore leaves a docs commit no bands
+  * head names — invisible to every probe, which sees the pre-batch
+  * store — and there is no torn state to recover.
   *
   * [[rebuild]] is the store's `optimize` (VERDICT r12 #2): the LSH
   * scheme is pinned at build, so a store grown past its occupancy
   * regime (x02's `minhashSchemeFor` schedule) must re-band or it
   * silently keeps a recall-collapsed scheme. Rebuild re-signatures
   * from the stored token sets (never raw text), compacts
-  * replay-duplicated docs rows, and swaps bands + docs + scheme in
-  * crash-atomically through the same [[SwapCommit]] marker.
+  * replay-duplicated docs rows, overwrites docs and then bands under
+  * the same protocol, and vacuums the replaced files.
   *
   * Single-writer contract: builds/appends/rebuilds are serialized by
   * the caller (dedupStream's foreachBatch already is). Readers are
-  * unrestricted WITHIN the writer's application — [[SwapCommit.withLock]]
-  * serializes every entry point's recovery against the writer's
-  * commit window in-process (ADVICE r13). A reader in a DIFFERENT
-  * process that lands inside a live writer's commit window first
-  * waits a grace period for the writer's own roll-forward
-  * ([[SwapCommit.awaitPending]]) and only recovers markers that
-  * outlive it (a crashed writer); the roll-forward primitives
-  * additionally tolerate lost cross-process races without deleting
-  * live data.
+  * unrestricted, except that [[rebuild]]'s vacuum deletes the
+  * replaced files at once, as a fresh [[build]] deletes the old tree:
+  * a probe must not run concurrently with a rebuild.
   */
 object MinhashSignatureStore {
-
-  /** LEGACY bucket fan-out of the bands table: stores whose `_scheme`
-    * predates the third (bucket-count) field were all written at 64.
-    * Since r18 the fan-out is DATA-DERIVED at build/rebuild time and
-    * pinned in the scheme file (guide §2.4/§6): a fixed 64 was both
-    * too many buckets at toy scale (64 near-empty files per append —
-    * the store scan, the probe's listing and the roll-forward's
-    * renames all paid the constant) and far too few at 100 TB (giant
-    * buckets defeat the DPP prune). Like the LSH scheme itself,
-    * bucket count is only comparable within one layout, so it changes
-    * at build/rebuild, never at append.
-    */
-  val BandBuckets = 64
 
   private val BucketTargetRows = 65536L
 
@@ -110,147 +94,79 @@ object MinhashSignatureStore {
     * per [[BucketTargetRows]], floored at 1, capped at [[MaxBuckets]]
     * (at the target that is ~270M band rows before buckets saturate;
     * a 100 TB deployment raises both together like bucketed-table
-    * DDL).
+    * DDL). Data-derived at build/rebuild time and pinned in the bands
+    * properties (guide §2.4/§6): a fixed 64 was both too many buckets
+    * at toy scale and far too few at 100 TB. Like the LSH scheme,
+    * bucket count is only comparable within one layout, so it changes
+    * at build/rebuild, never at append.
     */
   private def bucketsFor(bandRows: Long): Int =
     math.max(1L, math.min(MaxBuckets, bandRows / BucketTargetRows + 1)).toInt
 
-  /** Target rows per staged docs file (r18): the docs side of a batch
-    * is written `coalesce`d to ⌈staged docs / this⌉ files (capped at
-    * the session parallelism) instead of one near-empty file per
-    * shuffle partition — a small-batch append stages 1 docs file, not
-    * 32, and every later probe's docs scan lists that many fewer
-    * files.
+  /** Target rows per docs file (r18): a batch's docs are written
+    * `coalesce`d to ⌈docs / this⌉ files (capped at the session
+    * parallelism) instead of one near-empty file per shuffle
+    * partition — a small-batch append writes 1 docs file, not 32, and
+    * every later probe's docs scan reads that many fewer files.
     */
   private val DocsRowsPerFile = 65536L
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def docsFiles(spark: SparkSession, nDocs: Long): Int =
+    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+      nDocs / DocsRowsPerFile + 1)).toInt
 
-  private def schemePath(storeDir: String) =
-    new org.apache.hadoop.fs.Path(storeDir, "_scheme")
+  private def docsDir(storeDir: String) = s"$storeDir/docs"
+  private def bandsDir(storeDir: String) = s"$storeDir/bands"
 
-  /** Live bands row-count metadata `"<total> <staging-token>"`
-    * (VERDICT r16 #1): the sizing gate's store-row bound needs the
-    * EXACT bands row count, and deriving it from parquet footers per
-    * probe was one recursive listing + one footer open per file per
-    * MICRO-BATCH — driver-serial, ~2 s/probe at ~200 files on the
-    * x75 fixture, and an object-store listing storm at 100 TB. The
-    * count is instead maintained as commit metadata, updated inside
-    * the same lock + marker roll-forward as the table moves
-    * ([[rollForward]]): append stages its DELTA (known with no FS
-    * work at all — every doc with a non-empty token set emits exactly
-    * nBands band rows, so delta = |staged docs| × nBands), rebuild
-    * stages its new TOTAL. The staging-name token makes a crash
-    * replay's re-apply a no-op, so the metadata can only match the
-    * merged tree or be ABSENT (torn update windows delete-then-
-    * rename; readers fall back to the footer sweep and the next
-    * roll-forward re-seeds). One tiny read per probe, exact under the
-    * store's single-writer protocol — never a listing.
+  /** The bands-head properties that pin the layout. */
+  private val NHashes = "nHashes"
+  private val NBands = "nBands"
+  private val Buckets = "buckets"
+  private val DocsVersion = "docs_version"
+
+  /** One consistent view of the store, taken from ONE bands head: the
+    * scheme, the bands row count (the sum of the log's per-file row
+    * counts), the bands files, and docs read at the version those
+    * bands cover.
     */
-  private val BandsRowsFile = "_bands_rows"
-
-  private def bandsRowsPath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, BandsRowsFile)
-
-  /** (total, last-applied staging token), or None when absent/torn. */
-  private def readBandsRows(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[(Long, String)] =
-    try {
-      val p = bandsRowsPath(root)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        val parts = txt.split(" ", 2)
-        Some((parts(0).toLong, if (parts.length > 1) parts(1) else ""))
-      }
-    } catch { case _: Exception => None }
-
-  /** The store's exact bands row count from the [[BandsRowsFile]]
-    * commit metadata — one tiny driver-side file read, no Spark job,
-    * no listing; None when the store predates the metadata or a torn
-    * write left it absent. Callers use it as a SCALE SIGNAL (e.g.
-    * x71/x78's concurrent-vs-sequential probe-leg routing): it is the
-    * only store-size figure available for zero cost before any probe
-    * plan is built.
-    */
-  private[graft] def storedBandsRows(spark: SparkSession,
-      storeDir: String): Option[Long] =
-    readBandsRows(fs(spark, storeDir),
-      new org.apache.hadoop.fs.Path(storeDir)).map(_._1)
-
-  /** Tmp + delete + rename: not atomic across the delete, but a crash
-    * in the window leaves the file ABSENT — the safe direction (sweep
-    * fallback), never a stale count.
-    */
-  private def writeBandsRows(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, total: Long, token: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"$BandsRowsFile.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(s"$total $token".getBytes("UTF-8")) finally out.close()
-    f.delete(bandsRowsPath(root), false)
-    if (!f.rename(tmp, bandsRowsPath(root)))
-      sys.error(s"MinhashSignatureStore: rename $tmp -> $BandsRowsFile failed")
+  private final class Store(spark: SparkSession, storeDir: String,
+      val head: SnapshotLog.Snapshot) {
+    private def prop(k: String): Long = head.properties.getOrElse(k,
+      sys.error(s"$storeDir: bands v${head.version} has no '$k' property")).toLong
+    val nHashes: Int = prop(NHashes).toInt
+    val nBands: Int = prop(NBands).toInt
+    val buckets: Int = prop(Buckets).toInt
+    def bandsRows: Long = head.files.iterator.map(head.rows).sum
+    def bands: DataFrame =
+      SnapshotLog.readFiles(spark, bandsDir(storeDir), head, head.files)
+    def docs: DataFrame =
+      SnapshotLog.readAt(spark, docsDir(storeDir), prop(DocsVersion))
   }
 
-  /** Roll the staged `rows` metadata into the live count — runs AFTER
-    * the table moves, inside the same lock, idempotent via the
-    * staging token. A staging with no rows file (older writer)
-    * DELETES the live metadata: stale-low is the one state the gate's
-    * errs-high contract cannot tolerate.
+  /** Resolve the store's bands head. A directory without one (not a
+    * store, or a build that crashed before its bands commit) fails
+    * loudly instead of probing an empty or scheme-less store.
     */
-  private def applyStagedRows(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, mode: String,
-      staging: org.apache.hadoop.fs.Path): Unit = {
-    val rp = new org.apache.hadoop.fs.Path(staging, "rows")
-    if (!f.exists(rp)) { f.delete(bandsRowsPath(root), false); return }
-    val in = f.open(rp)
-    val staged = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-    finally in.close()
-    val token = staging.getName
-    (mode, readBandsRows(f, root)) match {
-      case (_, Some((_, tok))) if tok == token => () // crash replay
-      case ("rebuild", _) => writeBandsRows(f, root, staged, token)
-      case ("append", Some((t, _))) => writeBandsRows(f, root, t + staged, token)
-      case ("append", None) =>
-        // seed a legacy/torn store: the merge already landed, so the
-        // post-merge footer sweep IS the new total (one-time cost)
-        writeBandsRows(f, root,
-          footerSweep(f, new org.apache.hadoop.fs.Path(root, "bands")), token)
-      case _ => ()
-    }
-  }
+  private def open(spark: SparkSession, storeDir: String): Store =
+    new Store(spark, storeDir,
+      SnapshotLog.headSnapshot(spark, bandsDir(storeDir)).getOrElse(
+        throw new java.io.FileNotFoundException(
+          s"$storeDir has no committed bands snapshot " +
+            "(not a signature store, or a half-built one)")))
 
-  /** Stage the batch's bands row count (delta for append, total for
-    * rebuild) beside its tables, pre-publish.
+  /** The store's exact bands row count, from the bands head's per-file
+    * row counts: log metadata only, no Spark job, no listing. Callers
+    * use it as a SCALE SIGNAL (e.g. x71/x78's concurrent-vs-sequential
+    * probe-leg routing): it is the only store-size figure available for
+    * zero cost before any probe plan is built.
     */
-  private def stageRows(f: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path, rows: Long): Unit = {
-    val out = f.create(new org.apache.hadoop.fs.Path(staging, "rows"), true)
-    try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private[graft] def storedBandsRows(spark: SparkSession, storeDir: String): Long =
+    open(spark, storeDir).bandsRows
 
   /** (nHashes, nBands) pinned at build time. */
   def readScheme(spark: SparkSession, storeDir: String): (Int, Int) = {
-    val (nh, nb, _) = readSchemeBuckets(spark, storeDir)
-    (nh, nb)
-  }
-
-  /** (nHashes, nBands, bandBuckets) — the full pinned layout. Legacy
-    * two-field scheme files (every pre-r18 store) were all written at
-    * [[BandBuckets]] = 64 buckets.
-    */
-  private[graft] def readSchemeBuckets(spark: SparkSession,
-      storeDir: String): (Int, Int, Int) = {
-    val in = fs(spark, storeDir).open(schemePath(storeDir))
-    val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-    finally in.close()
-    val parts = txt.split(",").map(_.toInt)
-    (parts(0), parts(1), if (parts.length > 2) parts(2) else BandBuckets)
+    val s = open(spark, storeDir)
+    (s.nHashes, s.nBands)
   }
 
   /** (doc_id, arr, sz): sorted distinct token sets — x02's exact-verify
@@ -302,186 +218,73 @@ object MinhashSignatureStore {
       .withColumn("bkt", pmod(hash(col("band"), col("sig")), lit(buckets)))
   }
 
-  /** The store's layout-swap commit marker ([[SwapCommit]] protocol).
-    * Payload: `"<mode> <stagingDirName>"` with mode `append` (merge
-    * staged files into the live dirs) or `rebuild` (replace bands +
-    * docs + scheme wholesale).
+  /** Band rows of a token-set frame, clustered by bkt for the
+    * partitioned write: without the clustering every write task holds
+    * every bucket and the commit fans out to tasks×buckets tiny files
+    * (r12 measured 270 files for a 2.5 MB store — the file count, not
+    * the bytes, was most of the lifecycle's cost); clustered, each
+    * bucket lands as one file per batch, and the shuffle is
+    * batch-sized.
     */
-  private val CommitMarker = "_commit"
-  private val StagingPrefix = "_staged-"
+  private def bandsOf(arrs: DataFrame, nHashes: Int, nBands: Int,
+      buckets: Int, perms: Seq[(Int, Long, Long)]): DataFrame =
+    bandRows(signatures(arrs, nHashes, perms), nHashes, nBands, buckets)
+      .repartition(col("bkt"))
 
-  /** Complete a pending append/rebuild swap left behind by a crash
-    * (roll-forward recovery): every entry point calls this, so a
-    * reader can only observe the pre-commit layout (marker never
-    * published) or the fully-applied one — never a store holding a
-    * batch's bands without its docs (or a half-swapped rebuild).
-    * Idempotent at the file level: staged entries an earlier crashed
-    * recovery already applied are gone from staging and skipped.
-    */
-  def recover(spark: SparkSession, storeDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val f = fs(spark, storeDir)
-    SwapCommit.withLock(root) {
-      SwapCommit.pending(f, root, CommitMarker).foreach(applyPending(f, root, _))
-    }
+  /** Persist `df` for the duration of `body`, which runs actions on it. */
+  private def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(df) finally df.unpersist(blocking = false)
   }
 
-  /** Reader-entry recovery (ADVICE r13): same roll-forward guarantee
-    * as [[recover]], but a pending marker is presumed to belong to a
-    * LIVE writer first — wait [[SwapCommit.ReaderGraceMs]] for it to
-    * clear, and only recover a marker that outlives the grace.
+  /** Test-only failpoints shared by [[appendImpl]] and [[rebuildImpl]]:
+    * 1 throws before the docs commit, 2 between the docs and bands
+    * commits.
     */
-  private def recoverForRead(spark: SparkSession, storeDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val f = fs(spark, storeDir)
-    SwapCommit.withLock(root) {
-      SwapCommit.awaitPending(f, root, CommitMarker, SwapCommit.ReaderGraceMs)
-        .foreach(applyPending(f, root, _))
-    }
-  }
+  private def failpoint(failAt: Int, at: Int): Unit =
+    if (failAt == at) throw new java.io.IOException(
+      if (at == 1) "injected failure before the docs commit (test failpoint)"
+      else "injected failure between the docs and bands commits (test failpoint)")
 
-  private def applyPending(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, p: SwapCommit.Pending): Unit = {
-    val Array(mode, stagingName) = p.payload.split(" ", 2)
-    val staging = new org.apache.hadoop.fs.Path(root, stagingName)
-    rollForward(f, root, mode, staging, failAt = 0)
-    SwapCommit.finish(f, root, p.marker, staging)
-  }
-
-  /** Apply a committed staging dir to the live tree. `failAt` is a
-    * test-only failpoint: 3 throws between the bands and docs moves —
-    * the torn-batch window the marker protocol exists to close.
+  /** Write a whole layout from token sets (`nDocs` rows): overwrite
+    * docs, then overwrite bands with all four layout properties — the
+    * bands commit publishes the new scheme and the docs it covers at
+    * once.
     */
-  private def rollForward(f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, mode: String,
-      staging: org.apache.hadoop.fs.Path, failAt: Int): Unit = {
-    def sub(n: String) = new org.apache.hadoop.fs.Path(staging, n)
-    def live(n: String) = new org.apache.hadoop.fs.Path(root, n)
-    mode match {
-      case "append" =>
-        SwapCommit.mergeTree(f, sub("bands"), live("bands"))
-        if (failAt == 3) throw new java.io.IOException(
-          "injected FS failure between the bands and docs moves (test failpoint)")
-        SwapCommit.mergeTree(f, sub("docs"), live("docs"))
-      case "rebuild" =>
-        SwapCommit.replace(f, sub("bands"), live("bands"))
-        if (failAt == 3) throw new java.io.IOException(
-          "injected FS failure mid-rebuild-swap (test failpoint)")
-        SwapCommit.replace(f, sub("docs"), live("docs"))
-        // scheme last: until the marker clears, readers re-enter here
-        // anyway, so ordering only shapes the recovery replay
-        SwapCommit.replace(f, sub("scheme"), live("_scheme"))
-      case other => sys.error(s"unknown swap mode '$other' in $CommitMarker")
-    }
-    // count metadata last: a crash anywhere above replays through the
-    // marker and re-enters here; the staging token makes the re-apply
-    // a no-op once the count landed ([[applyStagedRows]])
-    applyStagedRows(f, root, mode, staging)
-    if (failAt == 4) throw new java.io.IOException(
-      "injected FS failure after the count-metadata update, before the " +
-        "marker retires (test failpoint: the replay must not double-add)")
-  }
-
-  /** Stage both tables, publish the commit marker, roll forward. The
-    * atomic-append path (VERDICT r12 #3): a crash anywhere before the
-    * marker publish leaves the live store untouched; after it, the
-    * batch always completes via [[recover]].
-    */
-  private def writeBatch(spark: SparkSession, docs: DataFrame,
-      storeDir: String, nHashes: Int, nBands: Int, buckets: Int,
-      perms: Seq[(Int, Long, Long)]): Unit = {
-    val arrs = tokenSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeArrsBatchImpl(spark, arrs, storeDir, nHashes, nBands, buckets,
-      perms, failAt = 0)
-    finally arrs.unpersist(blocking = false)
-  }
-
-  /** The store's pinned bucket fan-out, defaulting to the legacy 64
-    * when no scheme exists yet (a mid-build batch, or a test writing
-    * into a bare directory).
-    */
-  private def schemeBucketsOrDefault(spark: SparkSession,
-      storeDir: String): Int =
-    try readSchemeBuckets(spark, storeDir)._3
-    catch { case _: Exception => BandBuckets }
-
-  /** [[writeBatch]] with a test-only failpoint: 1 throws after staging
-    * but before the marker publish (live store must stay byte-
-    * identical); 2 throws right after the publish (next entry point
-    * must roll the whole batch forward); 3 throws between the two
-    * table moves (the torn window itself).
-    */
-  private[graft] def writeBatchImpl(spark: SparkSession, docs: DataFrame,
+  private def writeLayout(spark: SparkSession, arrs: DataFrame, nDocs: Long,
       storeDir: String, nHashes: Int, nBands: Int,
       perms: Seq[(Int, Long, Long)], failAt: Int): Unit = {
-    val arrs = tokenSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeArrsBatchImpl(spark, arrs, storeDir, nHashes, nBands,
-      schemeBucketsOrDefault(spark, storeDir), perms, failAt)
-    finally arrs.unpersist(blocking = false)
+    val buckets = bucketsFor(nDocs * nBands)
+    failpoint(failAt, 1)
+    val dv = SnapshotLog.overwrite(arrs.coalesce(docsFiles(spark, nDocs)),
+      docsDir(storeDir))
+    failpoint(failAt, 2)
+    SnapshotLog.overwrite(bandsOf(arrs, nHashes, nBands, buckets, perms),
+      bandsDir(storeDir), Seq("bkt"), Some(_ ++ Map(NHashes -> nHashes.toString,
+        NBands -> nBands.toString, Buckets -> buckets.toString,
+        DocsVersion -> dv.toString)))
   }
 
-  /** [[writeBatchImpl]] over a PRECOMPUTED token-set frame (doc_id,
-    * arr, sz — exactly [[tokenSets]]' output, persisted or cheaply
-    * recomputable): the probe-reuse append path (r18). [[dedupStream]]
-    * already tokenized the whole micro-batch for its probe; appending
-    * the kept docs re-ran that explode + distinct + sort aggregate
-    * per batch, when the kept token sets are a semi-join away from the
-    * probe's own frame.
+  /** Append token sets under the store's pinned layout: docs first,
+    * then bands naming that docs commit. With `txn` both commits are
+    * [[SnapshotLog.appendTxn]]s under one (appId, batch id), so a
+    * replay after a crash between them lands only the missing bands.
     */
-  private[graft] def writeArrsBatchImpl(spark: SparkSession, arrs: DataFrame,
-      storeDir: String, nHashes: Int, nBands: Int, buckets: Int,
-      perms: Seq[(Int, Long, Long)], failAt: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val f = fs(spark, storeDir)
-    val stagingName = s"$StagingPrefix${java.util.UUID.randomUUID()}"
-    val staging = s"$storeDir/$stagingName"
-    locally {
-      // Cluster by bkt before the partitioned write: without it every
-      // write task holds every bucket and the commit fans out to
-      // tasks×buckets tiny files (r12 measured 270 files for a 2.5 MB
-      // store — the file count, not the bytes, was most of the
-      // lifecycle's cost); clustered, each bucket lands as one file
-      // per batch, and the shuffle is batch-sized. The write also
-      // CARRIES the bands-row count as an observation (r18, guide
-      // §1.2): the staged-rows metadata needed the batch's row delta,
-      // and counting it was one more driver-sequenced job per append
-      // on a path ([[dedupStream]]) that runs per micro-batch.
-      val obs = org.apache.spark.sql.Observation()
-      bandRows(signatures(arrs, nHashes, perms), nHashes, nBands, buckets)
-        .observe(obs, count(lit(1)).as("n"))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$staging/bands")
-      val bandsDelta = obs.get("n").asInstanceOf[Long]
-      // docs files sized to the batch (r18, guide §6): the token-set
-      // aggregate leaves shuffle.partitions near-empty partitions, and
-      // staging them verbatim merged that many files into the live
-      // tree PER BATCH — every later probe's docs scan lists them all.
-      // bandsDelta / nBands is the exact staged doc count (each doc
-      // with a non-empty token set emits exactly nBands band rows).
-      val docFiles = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        bandsDelta / nBands / DocsRowsPerFile + 1))
-      arrs.coalesce(docFiles.toInt)
-        .write.mode("overwrite").parquet(s"$staging/docs")
-      stageRows(f, new org.apache.hadoop.fs.Path(staging), bandsDelta)
-    }
-    if (failAt == 1) throw new java.io.IOException(
-      "injected FS failure before commit-marker publish (test failpoint)")
-    // the whole publish→roll-forward→finish window holds the root lock
-    // so no reader's recovery can interleave with it (ADVICE r13)
-    SwapCommit.withLock(root) {
-      SwapCommit.publish(f, root, CommitMarker, s"append $stagingName")
-      if (failAt == 2) throw new java.io.IOException(
-        "injected FS failure after commit-marker publish (test failpoint)")
-      rollForward(f, root, "append",
-        new org.apache.hadoop.fs.Path(root, stagingName), failAt)
-      SwapCommit.finish(f, root,
-        new org.apache.hadoop.fs.Path(root, CommitMarker),
-        new org.apache.hadoop.fs.Path(root, stagingName))
-    }
+  private def appendArrs(spark: SparkSession, arrs: DataFrame,
+      storeDir: String, store: Store, perms: Seq[(Int, Long, Long)],
+      txn: Option[(String, Long)], failAt: Int): Unit = {
+    def commit(df: DataFrame, dir: String, partCols: Seq[String],
+        props: Option[Map[String, String] => Map[String, String]]): Long =
+      txn match {
+        case Some((app, v)) => SnapshotLog.appendTxn(df, dir, partCols, app, v, props)
+        case None => SnapshotLog.append(df, dir, partCols, props)
+      }
+    failpoint(failAt, 1)
+    val dv = commit(arrs.coalesce(docsFiles(spark, arrs.count())),
+      docsDir(storeDir), Nil, None)
+    failpoint(failAt, 2)
+    commit(bandsOf(arrs, store.nHashes, store.nBands, store.buckets, perms),
+      bandsDir(storeDir), Seq("bkt"), Some(_ + (DocsVersion -> dv.toString)))
   }
 
   /** Create the store from the historical corpus, pinning the scheme.
@@ -491,35 +294,29 @@ object MinhashSignatureStore {
     */
   def build(spark: SparkSession, docs: DataFrame, storeDir: String,
       nHashes: Int, nBands: Int, perms: Seq[(Int, Long, Long)]): Unit = {
-    val f = fs(spark, storeDir)
-    f.delete(new org.apache.hadoop.fs.Path(storeDir), true)
-    // bucket fan-out derived from the build corpus (r18, guide §6):
-    // one column-pruned count sizes the layout a pipeline then appends
-    // into until the next rebuild. Counting raw docs errs high vs the
-    // token-bearing rows that actually land — fine for sizing.
-    val buckets = bucketsFor(docs.count() * nBands)
-    writeBatch(spark, docs, storeDir, nHashes, nBands, buckets, perms)
-    // scheme file last, written atomically (tmp + rename): its absence
-    // marks a half-built store, which readScheme turns into a loud
-    // failure instead of a silently scheme-mismatched probe
-    val tmp = new org.apache.hadoop.fs.Path(storeDir, "_scheme.tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"$nHashes,$nBands,$buckets".getBytes("UTF-8"))
-    finally out.close()
-    f.rename(tmp, schemePath(storeDir))
+    new org.apache.hadoop.fs.Path(storeDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(storeDir), true)
+    // one count of the persisted token sets sizes the bucket fan-out
+    // and the docs files; both writes then read the cached frame
+    withCached(tokenSets(docs)) { arrs =>
+      writeLayout(spark, arrs, arrs.count(), storeDir, nHashes, nBands,
+        perms, failAt = 0)
+    }
   }
 
-  /** Append a batch (the caller's kept docs) under the pinned scheme.
-    * Completes any crashed predecessor's swap first and GCs aborted
-    * staging (safe: the store is single-writer by contract).
-    */
+  /** Append a batch (the caller's kept docs) under the pinned scheme. */
   def append(spark: SparkSession, docs: DataFrame, storeDir: String,
-      perms: Seq[(Int, Long, Long)]): Unit = {
-    recover(spark, storeDir)
-    SwapCommit.gcOrphans(fs(spark, storeDir),
-      new org.apache.hadoop.fs.Path(storeDir), StagingPrefix, CommitMarker, None)
-    val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
-    writeBatch(spark, docs, storeDir, nHashes, nBands, buckets, perms)
+      perms: Seq[(Int, Long, Long)]): Unit =
+    appendImpl(spark, docs, storeDir, perms, failAt = 0)
+
+  /** [[append]] with the test-only failpoints of [[failpoint]]. */
+  private[graft] def appendImpl(spark: SparkSession, docs: DataFrame,
+      storeDir: String, perms: Seq[(Int, Long, Long)], failAt: Int): Unit = {
+    val store = open(spark, storeDir)
+    withCached(tokenSets(docs)) { arrs =>
+      appendArrs(spark, arrs, storeDir, store, perms, None, failAt)
+    }
   }
 
   /** Re-band the store to a new pinned scheme — the store's
@@ -534,12 +331,20 @@ object MinhashSignatureStore {
     *     `docs/` (never raw text — the store is self-contained),
     *     compacting replay-duplicated rows (dedupStream's benign
     *     crash-window appends) to one row per doc_id;
-    *  2. stages the new `bands/` (bucketed exactly like a fresh
-    *     build), the compacted `docs/`, and the new scheme file;
-    *  3. publishes the [[SwapCommit]] marker and swaps all three in —
-    *     crash-atomic via the same [[recover]] roll-forward as
+    *  2. overwrites docs with the compacted rows, then bands with the
+    *     new bands (bucketed exactly like a fresh build) and the new
+    *     layout properties — the same docs-then-bands protocol as
     *     append, so a reader sees the old scheme+bands or the new,
-    *     never a mix.
+    *     never a mix;
+    *  3. vacuums both tables down to their new heads, with no grace
+    *     period (single-writer contract), so the store's disk use is
+    *     one layout again.
+    *
+    * It reads the docs HEAD, not the bands' `docs_version`: a docs
+    * commit that a crashed append or stream batch left without its
+    * bands is folded in and banded here. Dropping it instead would
+    * break a stream replay, whose docs `appendTxn` would then skip the
+    * batch while its bands still land.
     *
     * Cost is one full pass over the stored token sets — O(corpus),
     * like any compaction; probes before/after are scheme-consistent
@@ -556,81 +361,40 @@ object MinhashSignatureStore {
     * the maintenance hook an ingestion pipeline calls between batches
     * (or a compaction job calls on a schedule) so a growing store can
     * never silently keep a recall-collapsed LSH scheme. The check
-    * costs one column-pruned count plus the scheme-file read; returns
-    * true when a rebuild ran. `schemeFor` is the caller's occupancy
-    * policy (the x02 `minhashSchemeFor` schedule in this repo's
-    * pipelines), kept as a parameter so the operator stays
+    * costs one column-pruned count plus the bands head resolution;
+    * returns true when a rebuild ran. `schemeFor` is the caller's
+    * occupancy policy (the x02 `minhashSchemeFor` schedule in this
+    * repo's pipelines), kept as a parameter so the operator stays
     * policy-free.
     */
   def rebuildIfOutgrown(spark: SparkSession, storeDir: String,
       perms: Seq[(Int, Long, Long)],
       schemeFor: Long => (Int, Int)): Boolean = {
-    recover(spark, storeDir)
-    val current = readScheme(spark, storeDir)
-    val nDocs = spark.read.parquet(s"$storeDir/docs")
-      .select(col("doc_id")).dropDuplicates().count()
+    val store = open(spark, storeDir)
+    val nDocs = store.docs.select(col("doc_id")).dropDuplicates().count()
     val wanted = schemeFor(nDocs)
-    if (wanted != current) {
+    if (wanted != ((store.nHashes, store.nBands))) {
       rebuild(spark, storeDir, wanted._1, wanted._2, perms)
       true
     } else false
   }
 
-  /** [[rebuild]] with the same test-only failpoints as
-    * [[writeBatchImpl]]: 1 = pre-publish (old store must stay
-    * intact), 2 = post-publish (next entry point completes the
-    * swap), 3 = mid-swap.
-    */
+  /** [[rebuild]] with the test-only failpoints of [[failpoint]]. */
   private[graft] def rebuildImpl(spark: SparkSession, storeDir: String,
       nHashes: Int, nBands: Int, perms: Seq[(Int, Long, Long)],
       failAt: Int): Unit = {
-    recover(spark, storeDir)
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val f = fs(spark, storeDir)
-    SwapCommit.gcOrphans(f, root, StagingPrefix, CommitMarker, None)
-    readScheme(spark, storeDir) // loud failure on a half-built store
-    val stagingName = s"$StagingPrefix${java.util.UUID.randomUUID()}"
-    val staging = s"$storeDir/$stagingName"
+    open(spark, storeDir) // loud failure on a half-built store
     // one row per doc: replay-duplicated rows are byte-identical, so
     // any representative is exact; this is where their dead bytes die.
     // Persisted, then counted ONCE (r18): the count sizes the rebuilt
-    // bucket fan-out and the docs file count, and doubles as the
-    // staged row total (one band row per doc per band over the
-    // compacted corpus) — the old shape paid a separate third full
-    // pass for the total alone.
-    val arrs = spark.read.parquet(s"$storeDir/docs").dropDuplicates("doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nDocs = arrs.count()
-      // a rebuild is the store's re-bucketing moment too (like
-      // re-bucketing a bucketed table): the fan-out follows the
-      // compacted corpus, not the build-time guess
-      val buckets = bucketsFor(nDocs * nBands)
-      bandRows(signatures(arrs, nHashes, perms), nHashes, nBands, buckets)
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$staging/bands")
-      val docFiles = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        nDocs / DocsRowsPerFile + 1))
-      arrs.coalesce(docFiles.toInt)
-        .write.mode("overwrite").parquet(s"$staging/docs")
-      val out = f.create(new org.apache.hadoop.fs.Path(staging, "scheme"), true)
-      try out.write(s"$nHashes,$nBands,$buckets".getBytes("UTF-8"))
-      finally out.close()
-      stageRows(f, new org.apache.hadoop.fs.Path(staging), nDocs * nBands)
-    } finally arrs.unpersist(blocking = false)
-    if (failAt == 1) throw new java.io.IOException(
-      "injected FS failure before commit-marker publish (test failpoint)")
-    SwapCommit.withLock(root) {
-      SwapCommit.publish(f, root, CommitMarker, s"rebuild $stagingName")
-      if (failAt == 2) throw new java.io.IOException(
-        "injected FS failure after commit-marker publish (test failpoint)")
-      rollForward(f, root, "rebuild",
-        new org.apache.hadoop.fs.Path(root, stagingName), failAt)
-      SwapCommit.finish(f, root,
-        new org.apache.hadoop.fs.Path(root, CommitMarker),
-        new org.apache.hadoop.fs.Path(root, stagingName))
+    // bucket fan-out and the docs file count.
+    withCached(
+        SnapshotLog.read(spark, docsDir(storeDir)).dropDuplicates("doc_id")) { arrs =>
+      writeLayout(spark, arrs, arrs.count(), storeDir, nHashes, nBands,
+        perms, failAt)
+    }
+    Seq(docsDir(storeDir), bandsDir(storeDir)).foreach { dir =>
+      SnapshotLog.vacuum(spark, dir, retainLast = 1, staleGraceMs = 0L)
     }
   }
 
@@ -645,36 +409,46 @@ object MinhashSignatureStore {
   /** (doc_id, keep) via [[dedupVerdicts]] — the 100 TB ingest mode. */
   case object VerdictOnly extends ProbeMode
 
+  /** The [[SnapshotLog]] transaction app id of one stream checkpoint:
+    * the md5 of its qualified URI, so `/ckpt`, `/ckpt/` and
+    * `file:/ckpt` are one replay domain (ADVICE r13) and every
+    * distinct checkpoint is its own.
+    */
+  private[graft] def streamAppId(spark: SparkSession, checkpoint: String): String = {
+    val p = new org.apache.hadoop.fs.Path(checkpoint)
+    graft.Hashing.md5hex(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toUri.toString)
+  }
+
   /** Streaming ingest dedup: every micro-batch is near-deduplicated
     * against the store (history ∪ all earlier batches), its verdicts
     * land in `verdictDir/batch-<id>`, and its KEPT docs append — the
     * probe/[[append]] lifecycle driven by Structured Streaming
-    * through a batch-id-ledgered foreachBatch (the
-    * [[AnnIndex.appendStream]] idempotence pattern). `mode` picks the
-    * probe ([[ProbeMode]]): Census for audited ingest with match
-    * statistics, VerdictOnly for the bounded keep/drop path a
-    * production pipeline runs — keep/drop (and therefore the store's
+    * through a foreachBatch keyed on the store's own transaction map.
+    * `mode` picks the probe ([[ProbeMode]]): Census for audited ingest
+    * with match statistics, VerdictOnly for the bounded keep/drop path
+    * a production pipeline runs — keep/drop (and therefore the store's
     * growth) are contract-identical either way, so the mode can be
     * switched between runs of the same store.
     *
-    * Replay semantics, step by step: the ledger marker commits LAST,
-    * so a crash replays the whole batch. The verdict write is a
-    * per-batch overwrite (idempotent), and re-PROBING is verdict-
-    * identical even after a completed append — kept docs are pairwise
-    * below threshold, so the only new store candidates a replay sees
-    * verify below t, and self-pairs die on the d1 ≠ d2 guard. The one
-    * non-idempotent step is a re-APPEND (duplicate store rows for that
-    * batch): verdicts stay exact regardless — candidates are distinct
-    * pairs and n_dups counts distinct d1 — so the cost is dead bytes
-    * until the next [[rebuild]], never a wrong keep/drop.
+    * Replay semantics: both table commits of a batch are
+    * [[SnapshotLog.appendTxn]]s keyed by ([[streamAppId]], batch id),
+    * and a batch whose id the bands head already holds is skipped
+    * whole. A crash before the bands commit replays the batch: the
+    * verdict write is a per-batch overwrite (idempotent), the probe
+    * reads the pre-batch store (the bands head still names the
+    * pre-batch docs version) and so verdicts identically, the docs
+    * commit is a no-op if it already landed, and only the missing
+    * bands commit. The transaction map lives in the log, so it
+    * survives [[rebuild]] (every commit carries the head's map).
     *
-    * The ledger is namespaced per CHECKPOINT ([[graft.streaming.StreamLedger]],
-    * ADVICE r12): a fresh checkpoint pointed at an existing store
-    * restarts batch ids at 0, and an un-namespaced ledger would
-    * silently drop those batches — no verdicts, no append. Under the
-    * namespace each (store, checkpoint) binding replays independently;
-    * a new checkpoint re-applying an old batch is the benign
-    * duplicate-append case above.
+    * The app id is per CHECKPOINT (ADVICE r12): a fresh checkpoint
+    * pointed at an existing store restarts batch ids at 0, and one
+    * shared id would silently drop those batches — no verdicts, no
+    * append. A new checkpoint re-applying an old batch is the benign
+    * duplicate-append case: duplicate store rows cost dead bytes until
+    * the next [[rebuild]], never a wrong keep/drop (candidates are
+    * distinct pairs and n_dups counts distinct d1).
     */
   def dedupStream(stream: DataFrame, storeDir: String, verdictDir: String,
       perms: Seq[(Int, Long, Long)], threshold: Double,
@@ -684,9 +458,11 @@ object MinhashSignatureStore {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val f = fs(spark, storeDir)
-        graft.streaming.StreamLedger.once(f,
-            new org.apache.hadoop.fs.Path(storeDir), checkpoint, batchId) {
+        val appId = streamAppId(spark, checkpoint)
+        // ONE bands-head resolution per micro-batch serves the replay
+        // check, the probe and the append's scheme
+        val store = open(spark, storeDir)
+        if (!store.head.txns.get(appId).exists(_ >= batchId)) {
           // SPREAD the micro-batch to the session's parallelism before
           // anything reads it (the AnnIndex.dedupStream fix, measured
           // in the r16 stream-vs-batch sweep, BENCH_SWEEP_*_r16.json):
@@ -719,15 +495,6 @@ object MinhashSignatureStore {
               "spark.sql.shuffle.partitions" -> parts.toString) {
           val spread = graft.streaming.Spread.toWidth(batch, width)
           spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // ONE writer-entry recovery + staging GC + scheme read per
-          // micro-batch (r18, guide §1.2): the probe's reader-grace
-          // recovery and append's re-entry recover/gc were two more
-          // lock acquisitions + marker listings per batch, every one a
-          // no-op after this one (the stream is the single writer).
-          recover(spark, storeDir)
-          SwapCommit.gcOrphans(f, new org.apache.hadoop.fs.Path(storeDir),
-            StagingPrefix, CommitMarker, None)
-          val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
           // ONE tokenization of the micro-batch serves the probe AND
           // the kept-docs append (r18): the append used to re-run the
           // explode + distinct + sort aggregate over the kept docs,
@@ -741,11 +508,10 @@ object MinhashSignatureStore {
             // (the x71 ordering rule): the verdict frame is lazy
             val verdicts = mode match {
               case Census =>
-                dedupAgainstArrs(spark, spread, arrs, storeDir, perms,
-                  threshold)
+                dedupAgainstArrs(spark, spread, arrs, store, perms, threshold)
               case VerdictOnly =>
-                dedupVerdictsArrs(spark, spread, arrs, storeDir, perms,
-                  threshold)
+                dedupVerdictsStatsImpl(spark, spread, Some(arrs), store, perms,
+                  threshold).verdicts
             }
             verdicts.write.mode("overwrite").parquet(out)
             // in-memory kept handoff (r18): the verdict frame's
@@ -754,9 +520,9 @@ object MinhashSignatureStore {
             // the cached batch — the parquet read-back paid a listing
             // + scan per batch for the same rows
             val keptIds = verdicts.filter(col("keep")).select(col("doc_id"))
-            writeArrsBatchImpl(spark,
+            appendArrs(spark,
               arrs.join(broadcast(keptIds), Seq("doc_id"), "left_semi"),
-              storeDir, nHashes, nBands, buckets, perms, failAt = 0)
+              storeDir, store, perms, Some(appId -> batchId), failAt = 0)
           } finally {
             arrs.unpersist(blocking = false)
             spread.unpersist(blocking = false)
@@ -766,6 +532,7 @@ object MinhashSignatureStore {
         ()
       }
       .start()
+
 
   /** Band-collision candidate pairs (d1 → d2) for an incoming batch's
     * band rows: store collisions ∪ earlier-in-batch collisions, one
@@ -958,31 +725,29 @@ object MinhashSignatureStore {
   def dedupAgainst(spark: SparkSession, incoming: DataFrame,
       storeDir: String, perms: Seq[(Int, Long, Long)],
       threshold: Double): DataFrame = {
-    recoverForRead(spark, storeDir) // never read a half-committed batch/rebuild
+    val store = open(spark, storeDir)
     // one batch-sized cached frame; signatures, both band-join sides,
     // the verify d2 side and the verdict base all derive from it
-    val arrs = tokenSets(incoming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try dedupAgainstArrs(spark, incoming, arrs, storeDir, perms, threshold)
-    finally arrs.unpersist(blocking = false)
+    withCached(tokenSets(incoming)) { arrs =>
+      dedupAgainstArrs(spark, incoming, arrs, store, perms, threshold)
+    }
   }
 
-  /** [[dedupAgainst]] over a PRECOMPUTED token-set frame, with swap
-    * recovery and the frame's persist lifecycle the CALLER's
-    * responsibility — [[dedupStream]]'s per-batch path (r18): one
-    * writer-entry recovery and ONE tokenization of the micro-batch
-    * serve both the probe and the kept-docs append.
+  /** [[dedupAgainst]] over a PRECOMPUTED token-set frame and a resolved
+    * store view, the frame's persist lifecycle the CALLER's —
+    * [[dedupStream]]'s per-batch path (r18): one bands-head resolution
+    * and ONE tokenization of the micro-batch serve both the probe and
+    * the kept-docs append.
     */
-  private[graft] def dedupAgainstArrs(spark: SparkSession, incoming: DataFrame,
-      arrs: DataFrame, storeDir: String, perms: Seq[(Int, Long, Long)],
+  private def dedupAgainstArrs(spark: SparkSession, incoming: DataFrame,
+      arrs: DataFrame, store: Store, perms: Seq[(Int, Long, Long)],
       threshold: Double): DataFrame = {
-    val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
-    val storeBands = spark.read.parquet(s"$storeDir/bands")
-    val storeDocs = spark.read.parquet(s"$storeDir/docs")
+    val storeBands = store.bands
+    val storeDocs = store.docs
     graft.expressions.SortedIntersectCount.register(spark)
     locally {
-      val inc = bandRows(signatures(arrs, nHashes, perms), nHashes, nBands,
-        buckets)
+      val inc = bandRows(signatures(arrs, store.nHashes, perms), store.nHashes,
+        store.nBands, store.buckets)
       // the candidate jobs run HERE (eager localCheckpoint), inside a
       // scope that sizes their exchanges (VERDICT r13 #3 + the r14
       // foreachBatch OOM): only the cheap batch-sized verdict join is
@@ -996,7 +761,7 @@ object MinhashSignatureStore {
       // maxm-loose on dup-dense batches — sizing FROM it directly
       // re-benched 2× slower at the ×10 decade, thousands of near-idle
       // tasks per exchange).
-      val bound = candidateUpperBound(spark, storeDir, inc)
+      val bound = candidateUpperBound(store, inc)
       val fits = bound / PairsPerStaticPartition + 1 <=
         spark.conf.get("spark.sql.shuffle.partitions").toLong
       val perDoc = withCensusExchangeConf(spark,
@@ -1024,13 +789,11 @@ object MinhashSignatureStore {
     *    d1 < d2 yields Σ_g C(m_g, 2) over the batch's collision-group
     *    multiplicities — one batch-sized aggregate, no store access.
     *  - store-side pairs are ≤ store_band_rows × max_g m_g; the row
-    *    count is EXACT, read from the [[BandsRowsFile]] commit
-    *    metadata the swap roll-forward maintains (one tiny file —
-    *    VERDICT r16 #1: the r16 footer-sweep version of this
-    *    exactness re-listed and re-opened every bands file per
-    *    MICRO-BATCH, ~2 s/probe at sf0.1 and an object-store listing
-    *    storm at scale; [[footerSweep]] remains only as the
-    *    legacy-store fallback). ADVICE r15 killed the older bytes/2
+    *    count is EXACT, the sum of the bands head's per-file row
+    *    counts (log metadata — VERDICT r16 #1: the r16 footer-sweep
+    *    version of this exactness re-listed and re-opened every bands
+    *    file per MICRO-BATCH, ~2 s/probe at sf0.1 and an object-store
+    *    listing storm at scale). ADVICE r15 killed the older bytes/2
     *    heuristic: a dup-dense bands table (dictionary + RLE on
     *    band/sig, delta-packed ids, snappy) can compress below
     *    2 bytes/row, which made the "must only ever err HIGH"
@@ -1040,74 +803,16 @@ object MinhashSignatureStore {
     *    class). With the exact count the only slack left is maxm,
     *    which errs high by construction.
     *
-    * Cost: one aggregate job over the batch's band rows + one
-    * metadata-file read.
+    * Cost: one aggregate job over the batch's band rows; the row count
+    * comes with the already-resolved bands head.
     */
-  private def candidateUpperBound(spark: SparkSession, storeDir: String,
-      inc: DataFrame): Long = {
+  private def candidateUpperBound(store: Store, inc: DataFrame): Long = {
     val st = inc.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("m"))
       .agg(coalesce(max(col("m")), lit(0L)).as("maxm"),
         coalesce(sum(col("m") * (col("m") - lit(1L))), lit(0L)).as("sp2"))
       .head()
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fss = fs(spark, storeDir)
-    val storeRows = readBandsRows(fss, root) match {
-      case Some((t, _)) => t
-      case None => // pre-metadata store: one-time sweep; the next
-        // roll-forward seeds [[BandsRowsFile]] and retires this path
-        footerSweep(fss, new org.apache.hadoop.fs.Path(root, "bands"))
-    }
-    storeRows * st.getLong(0) + st.getLong(1) / 2
-  }
-
-  /** Per-file footer row counts for [[footerSweep]], keyed by
-    * (parent-dir/file NAME, length). The file name alone is NOT
-    * unique: Spark's part-file uuid is per WRITE JOB, so one task
-    * writing several `bkt=` partition dirs emits same-named (and
-    * often same-length) files whose row counts differ — the
-    * partition dir name disambiguates them. Within that key, content
-    * is stable: this store never rewrites a file in place (append
-    * stages new UUID-named files and rename-merges them; rebuild
-    * replaces whole dirs with fresh-UUID files), so an equal
-    * (bkt/name, length) IS the same content, possibly at another
-    * path (a cloned/copied store) — and therefore the same row
-    * count. Entries are a few dozen bytes; the clear() at 1M entries
-    * only bounds a pathological many-store driver, it never
-    * invalidates a live entry.
-    */
-  private val footerRowCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-
-  /** Exact row count of a parquet directory from file footers alone —
-    * no Spark job, no data pages read; one recursive listing plus one
-    * small metadata read per file NOT already in [[footerRowCache]].
-    * The LEGACY/seed path only ([[BandsRowsFile]] is the steady
-    * state): a fully cached sweep still lists every file, which is
-    * fine once, not per micro-batch. The walk uses plain `listStatus`:
-    * `listFiles` wraps each status in a `LocatedFileStatus`, which
-    * copies its permission bits, and Hadoop's pure-Java local
-    * filesystem loads those by running `ls -ld` per file.
-    */
-  private def footerSweep(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Long = {
-    if (!f.exists(dir)) return 0L
-    if (footerRowCache.size > 1000000) footerRowCache.clear()
-    // built once: `open(InputFile)` alone re-parses Hadoop's XML config
-    // for every footer
-    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(f.getConf).build()
-    def files(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
-      f.listStatus(p).iterator.flatMap { st =>
-        if (st.isDirectory) files(st.getPath) else Iterator(st)
-      }
-    files(dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      footerRowCache.computeIfAbsent(
-        (st.getPath.getParent.getName + "/" + st.getPath.getName, st.getLen), { _ =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf), opts)
-          try rd.getRecordCount finally rd.close()
-        })
-    }.sum
+    store.bandsRows * st.getLong(0) + st.getLong(1) / 2
   }
 
   /** ~1M two-long pair rows per static post-shuffle partition keeps a
@@ -1152,15 +857,13 @@ object MinhashSignatureStore {
   private[graft] def dedupAgainstLazy(spark: SparkSession, incoming: DataFrame,
       storeDir: String, perms: Seq[(Int, Long, Long)],
       threshold: Double): DataFrame = {
-    recoverForRead(spark, storeDir)
-    val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
-    val storeBands = spark.read.parquet(s"$storeDir/bands")
-    val storeDocs = spark.read.parquet(s"$storeDir/docs")
+    val store = open(spark, storeDir)
     graft.expressions.SortedIntersectCount.register(spark)
     graft.Caching.withPersistedThrough(tokenSets(incoming)) { arrs =>
       verdictFrame(incoming, censusPerDoc(spark, arrs,
-        bandRows(signatures(arrs, nHashes, perms), nHashes, nBands, buckets),
-        storeDocs, storeBands, threshold))
+        bandRows(signatures(arrs, store.nHashes, perms), store.nHashes,
+          store.nBands, store.buckets),
+        store.docs, store.bands, threshold))
     }
   }
 
@@ -1322,28 +1025,22 @@ object MinhashSignatureStore {
     */
   private[graft] def dedupVerdictsWithStats(spark: SparkSession,
       incoming: DataFrame, storeDir: String,
-      perms: Seq[(Int, Long, Long)], threshold: Double): VerdictStats = {
-    recoverForRead(spark, storeDir)
-    dedupVerdictsStatsImpl(spark, incoming, None, storeDir, perms, threshold)
-  }
+      perms: Seq[(Int, Long, Long)], threshold: Double): VerdictStats =
+    dedupVerdictsStatsImpl(spark, incoming, None, open(spark, storeDir),
+      perms, threshold)
 
-  /** [[dedupVerdicts]] over a precomputed token-set frame, recovery
-    * and the frame's lifecycle the caller's — [[dedupStream]]'s
-    * VerdictOnly per-batch path (r18, the [[dedupAgainstArrs]] twin).
+  /** The verdict-only probe against a resolved store view; `arrs0` is
+    * a precomputed token-set frame whose lifecycle is the caller's —
+    * [[dedupStream]]'s VerdictOnly per-batch path (r18, the
+    * [[dedupAgainstArrs]] twin).
     */
-  private[graft] def dedupVerdictsArrs(spark: SparkSession,
-      incoming: DataFrame, arrs: DataFrame, storeDir: String,
-      perms: Seq[(Int, Long, Long)], threshold: Double): DataFrame =
-    dedupVerdictsStatsImpl(spark, incoming, Some(arrs), storeDir, perms,
-      threshold).verdicts
-
   private def dedupVerdictsStatsImpl(spark: SparkSession,
-      incoming: DataFrame, arrs0: Option[DataFrame], storeDir: String,
+      incoming: DataFrame, arrs0: Option[DataFrame], store: Store,
       perms: Seq[(Int, Long, Long)], threshold: Double): VerdictStats = {
     import org.apache.spark.sql.expressions.Window
-    val (nHashes, nBands, buckets) = readSchemeBuckets(spark, storeDir)
-    val storeBands = spark.read.parquet(s"$storeDir/bands")
-    val storeDocs = spark.read.parquet(s"$storeDir/docs")
+    val (nHashes, nBands, buckets) = (store.nHashes, store.nBands, store.buckets)
+    val storeBands = store.bands
+    val storeDocs = store.docs
     graft.expressions.SortedIntersectCount.register(spark)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the round loop runs its own actions, so cache scopes are managed
@@ -1352,7 +1049,7 @@ object MinhashSignatureStore {
     val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { df.persist(lvl); persisted += df; df }
     try withAdvisoryCap(spark) {
-      val arrs = keep(tokenSets(incoming))
+      val arrs = arrs0.getOrElse(keep(tokenSets(incoming)))
       val inc = keep(bandRows(signatures(arrs, nHashes, perms), nHashes,
         nBands, buckets))
       // --- bounded generation: the rep stage (Scaladoc step 1) ---

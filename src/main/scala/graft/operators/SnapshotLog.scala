@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType,
+  StructField, StructType}
 
 /** Versioned-snapshot commit log over a plain-parquet, hive-partitioned
   * table — the atomic-commit / time-travel layer the north star names
@@ -71,6 +72,11 @@ object SnapshotLog {
     * prepare wrote this version's own doc — its adds are already
     * EXCLUDED from `files`; the field exists so writers refuse to
     * stack commits on an in-flight transaction ([[commitAll]]).
+    * `rows` maps each listed file to its physical row count from its
+    * footer (Delta's `numRecords`; deletion vectors not subtracted),
+    * so a table's size needs no footer opens. `properties` is the
+    * table's string configuration (Delta's `metaData.configuration`),
+    * stored cumulatively per commit like `constraints`.
     */
   case class Snapshot(version: Long, op: String, files: Seq[String],
       schema: StructType, partCols: Seq[String],
@@ -78,7 +84,9 @@ object SnapshotLog {
       stats: Map[String, Map[String, (Double, Double)]] = Map.empty,
       dvs: Map[String, Seq[String]] = Map.empty,
       constraints: Map[String, String] = Map.empty,
-      pendingTxn: Option[String] = None)
+      pendingTxn: Option[String] = None,
+      rows: Map[String, Long] = Map.empty,
+      properties: Map[String, String] = Map.empty)
 
   private val mapper = new ObjectMapper()
 
@@ -186,17 +194,44 @@ object SnapshotLog {
       }.toMap
     }.getOrElse(Map.empty)
 
-  /** Per-file (min, max) for every top-level numeric column, straight
-    * from the parquet FOOTERS of freshly-staged files — one KB-scale
-    * driver read per added file, the same cost class as the staging
-    * renames. Annotated physical types (decimal-as-int64, timestamps,
-    * strings) are skipped: their raw stats are not in logical units,
-    * and wrong stats prune wrongly. This is Delta's per-add stats
-    * JSON: the scan-time file pruning it buys ([[readWhere]]) needs
-    * no footer opens at all.
+  private def longMapOf(n: com.fasterxml.jackson.databind.JsonNode,
+      key: String): Map[String, Long] =
+    Option(n.get(key)).map { ln =>
+      ln.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+    }.getOrElse(Map.empty)
+
+  private def stringMapOf(n: com.fasterxml.jackson.databind.JsonNode,
+      key: String): Map[String, String] =
+    Option(n.get(key)).map { cn =>
+      cn.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+    }.getOrElse(Map.empty)
+
+  private def putStrings(root: com.fasterxml.jackson.databind.node.ObjectNode,
+      key: String, m: Map[String, String]): Unit =
+    if (m.nonEmpty) {
+      val n = root.putObject(key)
+      m.toSeq.sortBy(_._1).foreach { case (k, v) => n.put(k, v) }
+    }
+
+  private def putRows(root: com.fasterxml.jackson.databind.node.ObjectNode,
+      rows: Map[String, Long]): Unit =
+    if (rows.nonEmpty) {
+      val rn = root.putObject("rows")
+      rows.toSeq.sortBy(_._1).foreach { case (rel, n) => rn.put(rel, n) }
+    }
+
+  /** Per-file row count, and (min, max) for every top-level numeric
+    * column, straight from the parquet FOOTERS of freshly-staged files
+    * — one KB-scale driver read per added file, the same cost class as
+    * the staging renames. Every file gets a row count; annotated
+    * physical types (decimal-as-int64, timestamps, strings) get no
+    * (min, max): their raw stats are not in logical units, and wrong
+    * stats prune wrongly. This is Delta's per-add stats JSON: the
+    * scan-time file pruning it buys ([[readWhere]]) and a table's row
+    * count need no footer opens at all.
     */
-  private def collectStats(f: FileSystem, tableDir: String,
-      rels: Seq[String]): Map[String, Map[String, (Double, Double)]] = {
+  private def collectStats(f: FileSystem, tableDir: String, rels: Seq[String])
+      : (Map[String, Map[String, (Double, Double)]], Map[String, Long]) = {
     import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.column.statistics._
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -204,11 +239,11 @@ object SnapshotLog {
     // one options object per commit: `open(InputFile)` alone builds a
     // fresh Hadoop Configuration, re-parsing its XML, for every footer
     val opts = HadoopReadOptions.builder(f.getConf).build()
-    rels.map { rel =>
+    val perFile = rels.map { rel =>
       val in = HadoopInputFile.fromPath(dataPath(tableDir, rel), f.getConf)
       val r = ParquetFileReader.open(in, opts)
-      val cols = try {
-        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      try {
+        val cols = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
           .flatMap { c =>
             val p = c.getPath.toDotString
             val st = c.getStatistics
@@ -228,9 +263,11 @@ object SnapshotLog {
           .groupBy(_._1)
           .map { case (p, vs) => // min/max across the file's row groups
             p -> (vs.map(_._2._1).min, vs.map(_._2._2).max) }
+        (rel, cols, r.getRecordCount)
       } finally r.close()
-      rel -> cols
-    }.filter(_._2.nonEmpty).toMap
+    }
+    (perFile.collect { case (rel, cols, _) if cols.nonEmpty => rel -> cols }.toMap,
+      perFile.map { case (rel, _, n) => rel -> n }.toMap)
   }
 
   /** Load one committed snapshot; throws if the version was never
@@ -267,14 +304,16 @@ object SnapshotLog {
           decisions.getOrElseUpdate(p, txnStatusAt(hconf, p)).contains("committed")
       }
     var files: Seq[String] = strArr(docs.head, "files")
-    var stats = statsOf(docs.head) // full map on checkpoints
-    var dvs = dvsOf(docs.head)     // full map on checkpoints
+    var stats = statsOf(docs.head)          // full map on checkpoints
+    var rows = longMapOf(docs.head, "rows") // full map on checkpoints
+    var dvs = dvsOf(docs.head)              // full map on checkpoints
     if (!txnCommitted(docs.head)) {
       // a prepare can land on a checkpoint slot: its full listing
-      // (and stats/DV map) includes its own adds — back them out
+      // (and stats/rows/DV map) includes its own adds — back them out
       val own = strArr(docs.head, "adds").toSet
       files = files.filterNot(own.contains)
       stats = stats -- own
+      rows = rows -- own
       dvs = dvs -- own
     }
     docs.tail.foreach { d =>
@@ -284,6 +323,7 @@ object SnapshotLog {
         (if (visible) strArr(d, "adds") else Seq.empty)
       stats = (stats -- rm) ++ // adds-only on delta docs
         (if (visible) statsOf(d) else Map.empty)
+      rows = (rows -- rm) ++ (if (visible) longMapOf(d, "rows") else Map.empty)
       // a removed data file sheds its DVs; a dvs_full doc (restore)
       // REPLACES the map, a delta doc's dvs ACCUMULATE per file
       // (a second MoR delete on a file unions with the first)
@@ -296,17 +336,12 @@ object SnapshotLog {
     }
     val n = docs.last // the requested version's own doc: op/schema/txns
     val parts = strArr(n, "part_cols")
-    val txns = Option(n.get("txns")).map { tn =>
-      tn.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }.getOrElse(Map.empty[String, Long])
-    val cons = Option(n.get("constraints")).map { cn =>
-      cn.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
     val pending = Option(n.get("txn_decision")).map(_.asText())
       .filter(p => decisions.getOrElseUpdate(p, txnStatusAt(hconf, p)).isEmpty)
     Snapshot(n.get("version").asLong(), n.get("op").asText(), files.sorted,
       DataType.fromJson(n.get("schema").asText()).asInstanceOf[StructType],
-      parts, txns, stats, dvs, cons, pending)
+      parts, longMapOf(n, "txns"), stats, dvs, stringMapOf(n, "constraints"),
+      pending, rows, stringMapOf(n, "properties"))
   }
 
   /** The DV row relation: `(file_path, row_index)` pairs doomed by
@@ -336,7 +371,7 @@ object SnapshotLog {
     * relative to the table; bulk deletes belong to the copy-on-write
     * path ([[deleteByKeys]]), and [[compact]] physically purges DVs.
     */
-  private def readFiles(spark: SparkSession, tableDir: String,
+  private[graft] def readFiles(spark: SparkSession, tableDir: String,
       snap: Snapshot, rels: Seq[String]): DataFrame = {
     if (rels.isEmpty)
       return spark.createDataFrame(
@@ -517,6 +552,10 @@ object SnapshotLog {
     * commit aborts with `ConcurrentModificationException` for the
     * caller to retry the whole operation.
     *
+    * `propertiesUpdate` is a function of the head's properties, like
+    * `constraintsUpdate`, so a lost race re-applies it to the winner's
+    * map; without one the head's map is carried unchanged.
+    *
     * `private[graft]` (not `private`) so the spec can drive the
     * race/conflict paths deterministically.
     */
@@ -531,7 +570,9 @@ object SnapshotLog {
       unionSchemaWithHead: Boolean = true,
       expectedConstraints: Option[Map[String, String]] = None,
       precomputedStats: Map[String, Map[String, (Double, Double)]] = Map.empty,
-      txnDecision: Option[String] = None)(
+      precomputedRows: Map[String, Long] = Map.empty,
+      txnDecision: Option[String] = None,
+      propertiesUpdate: Option[Map[String, String] => Map[String, String]] = None)(
       rebase: Seq[String] => Seq[String]): Long = {
     val f = fs(spark, tableDir)
     f.mkdirs(logDir(tableDir))
@@ -611,10 +652,11 @@ object SnapshotLog {
       // snapshot would silently erase a racing constraint commit
       val headCons = headSnap.map(_.constraints).getOrElse(Map.empty)
       val consOut = constraintsUpdate.map(_(headCons)).getOrElse(headCons)
-      if (consOut.nonEmpty) {
-        val cn = root.putObject("constraints")
-        consOut.toSeq.sortBy(_._1).foreach { case (k, v) => cn.put(k, v) }
-      }
+      putStrings(root, "constraints", consOut)
+      // table properties: the same full-map, update-as-function shape
+      val headProps = headSnap.map(_.properties).getOrElse(Map.empty)
+      putStrings(root, "properties",
+        propertiesUpdate.map(_(headProps)).getOrElse(headProps))
       val listing = rebase(headFiles).sorted
       // deltas always (O(changed files)); the full listing only on
       // checkpoint versions — between them snapshotAt replays forward
@@ -626,17 +668,25 @@ object SnapshotLog {
       added.foreach(adds.add)
       val removes = root.putArray("removes")
       removed.foreach(removes.add)
-      // per-add footer stats (data skipping); checkpoints carry the
-      // full map so reconstruction never reopens a footer. Entries the
-      // caller already has stats for (a clone carrying its source's)
+      // per-add footer stats and row counts; checkpoints carry the
+      // full maps so reconstruction never reopens a footer. Entries the
+      // caller already has counts for (a clone carrying its source's)
       // skip the footer open — that keeps cloneShallow O(log metadata).
+      val (footStats, footRows) =
+        collectStats(f, tableDir, added.filterNot(precomputedRows.contains))
       val addedStats = precomputedStats.view.filterKeys(added.contains).toMap ++
-        collectStats(f, tableDir, added.filterNot(precomputedStats.contains))
+        footStats
+      val addedRows = precomputedRows.view.filterKeys(added.contains).toMap ++
+        footRows
       val checkpoint = next == 1L || next % CheckpointInterval == 0L
       val fullStats =
         if (checkpoint)
           (headSnap.map(_.stats).getOrElse(Map.empty) -- removed) ++ addedStats
         else addedStats
+      putRows(root,
+        if (checkpoint)
+          (headSnap.map(_.rows).getOrElse(Map.empty) -- removed) ++ addedRows
+        else addedRows)
       if (fullStats.nonEmpty) {
         val sn = root.putObject("stats")
         fullStats.foreach { case (rel, cols) =>
@@ -701,7 +751,9 @@ object SnapshotLog {
     * their now-unlinked files — remain readable via [[readAt]].
     */
   def overwrite(df: DataFrame, tableDir: String,
-      partCols: Seq[String] = Nil): Long = {
+      partCols: Seq[String] = Nil,
+      propertiesUpdate: Option[Map[String, String] => Map[String, String]] = None)
+      : Long = {
     val head = headSnapshot(df.sparkSession, tableDir)
     // strict resolution: overwrite replaces the schema, so a constraint
     // that stops resolving here would be dead forever
@@ -709,8 +761,8 @@ object SnapshotLog {
     val added = stage(df, tableDir, partCols)
     commit(df.sparkSession, tableDir, "overwrite", readSchema(df, partCols),
       partCols, unionSchemaWithHead = false,
-      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)))(
-      _ => added)
+      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)),
+      propertiesUpdate = propertiesUpdate)(_ => added)
   }
 
   /** Append `df`: new files join the head listing. Concurrent appends
@@ -721,15 +773,17 @@ object SnapshotLog {
     * fast instead of committing an unreadable listing.
     */
   def append(df: DataFrame, tableDir: String,
-      partCols: Seq[String] = Nil): Long = {
+      partCols: Seq[String] = Nil,
+      propertiesUpdate: Option[Map[String, String] => Map[String, String]] = None)
+      : Long = {
     val spark = df.sparkSession
     val head = headSnapshot(spark, tableDir)
     enforceConstraints(head, df, "append")
     val schema = evolvedSchema(head, df, partCols)
     val added = stage(df, tableDir, partCols)
     commit(spark, tableDir, "append", schema, partCols,
-      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)))(
-      headFiles => headFiles ++ added)
+      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)),
+      propertiesUpdate = propertiesUpdate)(headFiles => headFiles ++ added)
   }
 
   /** Reject `df` if any row violates a table CHECK constraint. Delta's
@@ -831,18 +885,31 @@ object SnapshotLog {
 
   /** By-name union of the table schema and an incoming one: new fields
     * land nullable (absent from every older file), same-name fields
-    * must agree on type. Name matching is CASE-INSENSITIVE — Spark
-    * resolves columns case-insensitively by default, so a
+    * must agree on type, nested nullability aside. Name matching is
+    * CASE-INSENSITIVE — Spark resolves columns case-insensitively by
+    * default, so a
     * case-variant duplicate ('payload' + 'Payload') would commit a
     * head schema every subsequent read throws on.
     */
   private def unionSchemas(table: StructType, incoming: StructType,
       partCols: Seq[String]): StructType = {
+    // nested nullability is no type difference: parquet does not enforce
+    // it and Spark reads every file column back nullable, so a table
+    // rewritten from its own read (containsNull = true) must still take
+    // appends of a freshly built frame (containsNull = false)
+    def nullable(t: DataType): DataType = t match {
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case st: StructType => StructType(st.fields.map(x =>
+        x.copy(dataType = nullable(x.dataType), nullable = true)))
+      case other => other
+    }
     val existing = table.fields
       .map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> f).toMap
     incoming.fields.foreach { f =>
       existing.get(f.name.toLowerCase(java.util.Locale.ROOT)).foreach { ef =>
-        require(ef.dataType == f.dataType,
+        require(nullable(ef.dataType) == nullable(f.dataType),
           s"schema evolution type conflict on '${f.name}': table has " +
           s"${ef.dataType.simpleString}, frame has ${f.dataType.simpleString}")
       }
@@ -871,7 +938,9 @@ object SnapshotLog {
     * when the batch was already in.
     */
   def appendTxn(df: DataFrame, tableDir: String, partCols: Seq[String],
-      appId: String, version: Long): Long = {
+      appId: String, version: Long,
+      propertiesUpdate: Option[Map[String, String] => Map[String, String]] = None)
+      : Long = {
     val spark = df.sparkSession
     val head = headSnapshot(spark, tableDir)
     val replayed = head.filter(_.txns.get(appId).exists(_ >= version))
@@ -881,8 +950,8 @@ object SnapshotLog {
     val added = stage(df, tableDir, partCols)
     commit(spark, tableDir, "append", schema, partCols,
       txn = Some(appId -> version),
-      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)))(
-      headFiles => headFiles ++ added)
+      expectedConstraints = Some(head.map(_.constraints).getOrElse(Map.empty)),
+      propertiesUpdate = propertiesUpdate)(headFiles => headFiles ++ added)
   }
 
   // ---------------------------------------- multi-table transaction (2PC)
@@ -1178,7 +1247,7 @@ object SnapshotLog {
     }
   }
 
-  private def headSnapshot(spark: SparkSession,
+  private[graft] def headSnapshot(spark: SparkSession,
       tableDir: String): Option[Snapshot] =
     latestVersion(spark, tableDir).map(snapshotAt(spark, tableDir, _))
 
@@ -1504,7 +1573,7 @@ object SnapshotLog {
     *    foreign references into LOCAL files, un-sharing exactly the
     *    touched partitions;
     *  - [[vacuum]] only ever deletes files under its own root.
-    * Deletion vectors and CHECK constraints carry over; txn
+    * Deletion vectors, CHECK constraints and properties carry over; txn
     * idempotence slots do NOT (the clone is a new table identity, as
     * in Delta). A clone of a clone keeps pointing at the ORIGINAL
     * physical files.
@@ -1534,7 +1603,9 @@ object SnapshotLog {
       constraintsUpdate = Some(_ => snap.constraints),
       unionSchemaWithHead = false,
       precomputedStats =
-        snap.stats.map { case (k, cols) => retag(k) -> cols })(
+        snap.stats.map { case (k, cols) => retag(k) -> cols },
+      precomputedRows = snap.rows.map { case (k, n) => retag(k) -> n },
+      propertiesUpdate = Some(_ => snap.properties))(
       _ => snap.files.map(retag))
   }
 
@@ -1737,7 +1808,9 @@ object SnapshotLog {
         root.remove("txn_decision")
         val arr = root.putArray("files")
         snap.files.foreach(arr.add)
-        root.remove("stats") // promote to the FULL stats map too
+        root.remove("rows") // promote the FULL row-count map too
+        putRows(root, snap.rows)
+        root.remove("stats") // and the FULL stats map
         if (snap.stats.nonEmpty) {
           val sn = root.putObject("stats")
           snap.stats.foreach { case (rel, cols) =>

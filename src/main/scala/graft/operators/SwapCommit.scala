@@ -15,19 +15,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * knows which to reach for:
   *  - [[SnapshotLog]]: versioned TABLES — multi-table txns, time
   *    travel, readers pinned to snapshots via a log of file lists.
-  *  - THIS protocol: index-shaped STORES read by plain
-  *    `spark.read.parquet` (AnnIndex cell layouts, the minhash
-  *    signature store), where the read path must stay a vanilla
-  *    partitioned parquet scan (partition pruning / DPP depend on
-  *    it) and the only atomicity need is "the next reader sees the
-  *    whole mutation or none of it".
+  *  - THIS protocol: the AnnIndex cell layout, read by plain
+  *    `spark.read.parquet`, where the only atomicity need is "the
+  *    next reader sees the whole mutation or none of it". (The
+  *    minhash signature store commits through [[SnapshotLog]]; the
+  *    index is the next to move.)
   *  - The parquet committer's `_temporary` staging: single-job,
   *    single-directory writes — both of the above build on it.
   *
-  * Users: [[AnnIndex.optimize]] (cell-split swap) and
-  * [[MinhashSignatureStore]] (atomic two-table append + scheme
-  * rebuild). Each user supplies its own roll-forward (what "apply the
-  * staged state" means for its layout); the roll-forward MUST be
+  * Users: [[AnnIndex.optimize]] (cell-split swap) only. The user
+  * supplies its own roll-forward (what "apply the staged state" means
+  * for its layout); the roll-forward MUST be
   * idempotent — staged entries already applied by a crashed
   * predecessor are absent from staging and get skipped — because
   * every reader/writer entry point re-runs it until [[finish]]
@@ -40,16 +38,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     point (reader or writer) runs its recovery, and every writer
   *     its publish→roll-forward→finish window, under this lock, so
   *     within one application the race cannot happen at all. This is
-  *     the supported deployment: the stores' FS mutations all run on
+  *     the supported deployment: the index's FS mutations all run on
   *     the driver of the single-writer application.
   *  2. [[awaitPending]] — a reader that finds a pending marker first
   *     gives a grace window for a LIVE writer (necessarily in another
   *     process, layer 1 excludes local ones) to finish its own
   *     roll-forward; only a marker that outlives the grace — a
   *     crashed writer — is recovered by the reader.
-  *  3. [[mergeTree]]/[[replace]] tolerate LOST races: a rename that
-  *     fails because a racing peer already applied the same committed
-  *     swap is success, and replace displaces the live tree into a
+  *  3. [[replace]] tolerates LOST races: a rename that fails
+  *     because a racing peer already applied the same committed swap
+  *     is success, and it displaces the live tree into a
   *     caller-owned trash name instead of deleting it, so even the
   *     worst cross-process interleaving can restore what it moved —
   *     no sequence of racing recoveries can lose live data.
@@ -95,7 +93,7 @@ private[graft] object SwapCommit {
   }
 
   /** Cross-process reader grace: how long a READER entry point of
-    * either store waits in [[awaitPending]] for a live writer in
+    * the index waits in [[awaitPending]] for a live writer in
     * another process to finish its own roll-forward before treating
     * the marker as a crashed writer's (in-process writers are excluded
     * by [[withLock]], so the wait only ever triggers cross-process — or
@@ -153,7 +151,7 @@ private[graft] object SwapCommit {
     * that crashed between create and rename — ADVICE r13), and stale
     * [[TrashPrefix]] dirs (a [[replace]] that crashed between
     * displace and delete). Call from WRITER entry points only, AFTER
-    * recovery — the store contracts are single-writer, so with no
+    * recovery — the index contract is single-writer, so with no
     * marker pending every such entry is a crashed predecessor's,
     * never a live peer's.
     */
@@ -172,44 +170,12 @@ private[graft] object SwapCommit {
   /** rename() that treats a vanished source as a FAILED rename instead
     * of an exception: several FileSystem implementations (the local FS
     * included) throw FileNotFoundException when a racing peer moved
-    * the source first — for the tolerant roll-forwards that is a lost
+    * the source first — for the tolerant roll-forward that is a lost
     * race to classify, not an error to propagate.
     */
   private def tryRename(f: FileSystem, src: Path, dst: Path): Boolean =
     try f.rename(src, dst)
     catch { case _: java.io.FileNotFoundException => false }
-
-  /** listStatus() that treats a vanished directory as empty — a racing
-    * peer's [[finish]] may retire the staging tree mid-walk.
-    */
-  private def listSafe(f: FileSystem,
-      dir: Path): Array[org.apache.hadoop.fs.FileStatus] =
-    try f.listStatus(dir)
-    catch { case _: java.io.FileNotFoundException => Array.empty }
-
-  /** Move every data file of the staged tree into the live tree,
-    * preserving partition subdirectories — the MERGE roll-forward
-    * (append semantics: live files are never touched). Idempotent:
-    * a file already moved by a crashed predecessor is absent from
-    * staging and skipped. File names are job-UUID-unique (parquet
-    * part naming), so a merge can never clobber a live file. A rename
-    * lost to a racing recoverer applying the same committed swap
-    * (source gone, destination present) is success (ADVICE r13);
-    * any other failure is loud.
-    */
-  def mergeTree(f: FileSystem, src: Path, dst: Path): Unit =
-    if (f.exists(src)) {
-      f.mkdirs(dst)
-      listSafe(f, src).foreach { st =>
-        if (st.isDirectory) mergeTree(f, st.getPath, new Path(dst, st.getPath.getName))
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val to = new Path(dst, st.getPath.getName)
-          if (!tryRename(f, st.getPath, to))
-            require(!f.exists(st.getPath) && f.exists(to),
-              s"SwapCommit: merge rename failed for $to")
-        }
-      }
-    }
 
   /** Replace the live dir/file with the staged one — the REPLACE
     * roll-forward (rebuild semantics). Idempotent: staged source

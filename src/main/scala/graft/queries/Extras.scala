@@ -3367,22 +3367,22 @@ object Extras {
   private val ParallelProbeBandsLimit = 65536L
 
   /** Route the two probe legs concurrent vs sequential from the
-    * store's `_bands_rows` commit metadata (one tiny driver read,
-    * zero Spark jobs — the only store-size signal that costs nothing
-    * before a plan is built). Overlap wins exactly where the probes
-    * are SCHEDULER-LATENCY-bound (small stores/batches: executors
+    * store's bands row count (the bands head's per-file row counts:
+    * log metadata, zero Spark jobs — the only store-size signal that
+    * costs nothing before a plan is built). Overlap wins exactly
+    * where the probes are SCHEDULER-LATENCY-bound (small
+    * stores/batches: executors
     * idle between a probe's driver-sequenced jobs); past the bound
     * the probes are data-bound — they saturate the cores anyway, and
     * two census candidate exchanges in flight TOGETHER doubled peak
     * execution memory and OOM'd the 8 GB sf10 sweep this round. So:
-    * concurrent iff the metadata says the store is under
+    * concurrent iff the store holds at most
     * [[ParallelProbeBandsLimit]] band rows (≈ a ≤16k-doc store at the
-    * (16,4) scheme); absent metadata (legacy store) routes sequential
-    * — the conservative, sweep-proven path.
+    * (16,4) scheme).
     */
   private def smallStoreProbe(s: SparkSession, storeDir: String): Boolean =
-    graft.operators.MinhashSignatureStore.storedBandsRows(s, storeDir)
-      .exists(_ <= ParallelProbeBandsLimit)
+    graft.operators.MinhashSignatureStore.storedBandsRows(s, storeDir) <=
+      ParallelProbeBandsLimit
 
   def x71IncrementalMinhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

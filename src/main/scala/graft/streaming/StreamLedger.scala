@@ -5,6 +5,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** Batch-id ledger for foreachBatch sinks that mutate a persistent
   * store (the LakeSink discipline: marker written AFTER the data, so
   * a replayed micro-batch is skipped instead of double-applied).
+  * Its one user is [[graft.operators.AnnIndex]]'s `appendStream` and
+  * `dedupStream`; the minhash signature store keys its batches in its
+  * own [[graft.operators.SnapshotLog]] transaction map, under an app
+  * id hashed from the same qualified checkpoint URI.
   *
   * Markers are NAMESPACED BY CHECKPOINT IDENTITY (ADVICE r12): batch
   * ids are scoped to one checkpoint — a FRESH checkpoint pointed at an
@@ -15,19 +19,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * checkpoint location makes each (store, checkpoint) binding its own
   * replay domain: replays within one query still skip; a new
   * checkpoint starts a clean ledger and re-applies from its own
-  * batch 0 (for the stores using this, a re-append is the documented
-  * benign case — dead bytes until the next rebuild, never a wrong
-  * result).
+  * batch 0.
   *
   * The namespace hashes the checkpoint's QUALIFIED URI, not the raw
   * string (ADVICE r13): `/ckpt`, `/ckpt/` and `file:/ckpt` are one
   * checkpoint and must be one replay domain — a restart that merely
   * spells the path differently would otherwise re-apply crash-window
-  * batches (benign for the minhash store; duplicate vectors for
+  * batches (duplicate vectors for
   * [[graft.operators.AnnIndex.appendStream]]). Migration note: ledgers
   * written before this normalization (raw-string hash) resolve to a
   * different namespace, so one restart may re-apply its crash-window
-  * batch once — the documented duplicate-append case.
+  * batch once.
   */
 object StreamLedger {
 

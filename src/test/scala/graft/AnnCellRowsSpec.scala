@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.AnnIndex
 
 /** The `_cell_rows` occupancy commit metadata (r18, VERDICT r17 #3 —
-  * the `_bands_rows` idiom applied to the index): maintained by
+  * an exact-or-absent sidecar; the signature store's row count, its
+  * model, now comes from its SnapshotLog commits): maintained by
   * append/optimize, seeded lazily by the first maintenance call, and
   * EXACT against the scan it replaces at every step — wrong counts
   * would silently change the split planner's seed ranks and therefore

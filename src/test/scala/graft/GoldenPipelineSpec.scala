@@ -241,4 +241,28 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(cleanOnly.count() == 1)
     assert(spark.read.parquet(s"$lake/_quarantine/campaign").count() == 1)
   }
+
+  test("writePartitioned scopes dynamic partition overwrite to its own " +
+      "write: the caller's session conf is unchanged and a later static " +
+      "overwrite replaces the whole table") {
+    val s = spark.newSession()
+    import s.implicits._
+    val before = s.conf.getAll
+    val lake = java.nio.file.Files.createTempDirectory("graft-bronze-conf")
+      .toString + "/t"
+    Bronze.writePartitioned(Seq(("a", "d1"), ("b", "d2")).toDF("id", "day"),
+      lake, "day")
+    // a dynamic overwrite of d2 alone keeps d1
+    Bronze.writePartitioned(Seq(("c", "d2")).toDF("id", "day"), lake, "day")
+    assert(s.read.parquet(lake).as[(String, String)].collect().toSet ==
+      Set(("a", "d1"), ("c", "d2")))
+    val after = s.conf.getAll
+    assert(after == before, "no conf key leaks out of the call: " +
+      s"added ${after.toSet diff before.toSet}, lost ${before.toSet diff after.toSet}")
+    // the caller's own static overwrite replaces every partition
+    Seq(("z", "d3")).toDF("id", "day").write.mode("overwrite")
+      .partitionBy("day").parquet(lake)
+    assert(s.read.parquet(lake).as[(String, String)].collect().toSet ==
+      Set(("z", "d3")))
+  }
 }

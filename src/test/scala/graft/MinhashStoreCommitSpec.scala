@@ -4,142 +4,107 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.MinhashSignatureStore
+import graft.operators.{MinhashSignatureStore, SnapshotLog}
 import graft.queries.Extras
 
-/** The signature store's COMMIT surface — atomic append swap,
-  * `_bands_rows` metadata, rebuild/rebuildIfOutgrown — split out of
+/** The signature store's COMMIT surface — docs-then-bands append, the
+  * bands log's row count, rebuild/rebuildIfOutgrown — split out of
   * [[MinhashStoreSpec]] (see the note there).
   */
 class MinhashStoreCommitSpec extends MssStoreSpecBase {
 
+  private def versions(store: String): (Long, Long) =
+    (SnapshotLog.latestVersion(spark, s"$store/docs").get,
+      SnapshotLog.latestVersion(spark, s"$store/bands").get)
+
   test("append commits atomically: a probe sees a batch's bands AND " +
       "docs, or neither (VERDICT r12 #3)") {
-    def counts(store: String): (Long, Long) =
-      (spark.read.parquet(s"$store/docs").count(),
-        spark.read.parquet(s"$store/bands").count())
     val batch = docsDf(30L -> freshText)
+    def probe(store: String) = verdictMap(MinhashSignatureStore.dedupAgainst(
+      spark, docsDf(40L -> freshText), store, perms, T))
+    // reference verdicts for the twin doc 40: before and after ONE
+    // clean append of its original
+    val ref = freshStore("tearref")
+    MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
+      ref, 16, 4, perms)
+    val pre = probe(ref)
+    MinhashSignatureStore.append(spark, batch, ref, perms)
+    val post = probe(ref)
+    assert(pre(40L)._1 === true && post(40L) === ((false, 1L, 1.0)))
 
-    // failpoint 1: crash AFTER staging both tables, BEFORE the marker
-    // publish — the live store must stay byte-identical (the staged
-    // batch is invisible), and the next real append must GC the orphan
+    // failpoint 1: crash before the docs commit — neither table moves
     val s1 = freshStore("tear1")
     MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
       s1, 16, 4, perms)
-    val before = counts(s1)
+    val before = versions(s1)
     intercept[java.io.IOException] {
-      MinhashSignatureStore.writeBatchImpl(spark, batch, s1, 16, 4, perms,
-        failAt = 1)
+      MinhashSignatureStore.appendImpl(spark, batch, s1, perms, failAt = 1)
     }
-    assert(counts(s1) === before, "pre-commit crash must leave the live " +
-      "store untouched")
-    val twin = verdictMap(MinhashSignatureStore.dedupAgainst(
-      spark, docsDf(40L -> freshText), s1, perms, T))
-    assert(twin(40L)._1 === true,
-      "the crashed batch never landed, so its twin is a keeper")
-    assert(new java.io.File(s1).listFiles().exists(
-      _.getName.startsWith("_staged-")), "orphan staging present pre-GC")
-    MinhashSignatureStore.append(spark, batch, s1, perms)
-    assert(!new java.io.File(s1).listFiles().exists(
-      _.getName.startsWith("_staged-")),
-      "the next writer GCs aborted staging")
-    assert(counts(s1)._1 === 3)
+    assert(versions(s1) === before, "a pre-commit crash moves no version")
+    assert(probe(s1) === pre, "the crashed batch never landed")
 
-    // failpoints 2 and 3: crash after the marker publish (before any
-    // move / between the two table moves) — the next reader entry
-    // point must roll the WHOLE batch forward: bands and docs together
-    for (fp <- Seq(2, 3)) {
-      val s = freshStore(s"tear$fp")
-      MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
-        s, 16, 4, perms)
-      val (d0, b0) = counts(s)
-      intercept[java.io.IOException] {
-        MinhashSignatureStore.writeBatchImpl(spark, batch, s, 16, 4, perms,
-          failAt = fp)
-      }
-      // a probing reader completes the swap before reading
-      val v = verdictMap(MinhashSignatureStore.dedupAgainst(
-        spark, docsDf(40L -> freshText), s, perms, T))
-      assert(v(40L) === ((false, 1L, 1.0)),
-        s"failpoint $fp: the committed batch must be fully visible")
-      val (d1, b1) = counts(s)
-      assert(d1 > d0 && b1 > b0,
-        s"failpoint $fp: both tables must have rolled forward together")
-      assert(!new java.io.File(s, "_commit").exists,
-        "recovery retires the marker")
+    // failpoint 2: crash between the docs and bands commits — the docs
+    // commit lands, but no bands head names it
+    val s2 = freshStore("tear2")
+    MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
+      s2, 16, 4, perms)
+    val (d0, b0) = versions(s2)
+    intercept[java.io.IOException] {
+      MinhashSignatureStore.appendImpl(spark, batch, s2, perms, failAt = 2)
     }
+    assert(versions(s2) === ((d0 + 1, b0)))
+    assert(probe(s2) === pre,
+      "a probe reads the docs version the bands head covers: pre-batch")
+    MinhashSignatureStore.append(spark, batch, s2, perms)
+    assert(probe(s2) === post,
+      "a retried append probes exactly like one clean append")
   }
 
-  test("_bands_rows commit metadata tracks the exact bands row count " +
-      "through build, append, rebuild, crash replay, and a legacy store " +
+  test("the bands log's row count is exact through build, appends, a " +
+      "crashed append and rebuild, and the store keeps no sidecar " +
       "(VERDICT r16 #1)") {
-    def meta(store: String): Option[Long] = {
-      val f = new java.io.File(store, "_bands_rows")
-      if (!f.exists) None
-      else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        "UTF-8").trim.split(" ")(0).toLong)
-    }
-    def truth(store: String): Long =
-      spark.read.parquet(s"$store/bands").count()
     val store = freshStore("rowsmeta")
+    def truth: Long = SnapshotLog.read(spark, s"$store/bands").count()
+    def rows: Long = MinhashSignatureStore.storedBandsRows(spark, store)
     MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
       store, 16, 4, perms)
-    assert(meta(store) === Some(truth(store)), "build seeds the exact count")
+    assert(rows === truth, "build records the exact count")
     MinhashSignatureStore.append(spark, docsDf(3L -> freshText), store, perms)
-    assert(meta(store) === Some(truth(store)), "append adds its exact delta")
-    // post-publish crash (failAt 2): the count lands during the
-    // READER's roll-forward, exactly once
+    assert(rows === truth, "append adds its exact delta")
     intercept[java.io.IOException] {
-      MinhashSignatureStore.writeBatchImpl(spark, docsDf(4L -> zText),
-        store, 16, 4, perms, failAt = 2)
+      MinhashSignatureStore.appendImpl(spark, docsDf(4L -> zText), store,
+        perms, failAt = 2)
     }
-    MinhashSignatureStore.dedupAgainst(spark, docsDf(50L -> freshText),
-      store, perms, T).collect()
-    assert(meta(store) === Some(truth(store)),
-      "a reader-replayed batch lands its delta exactly once")
-    // crash AFTER the count update but before the marker retires
-    // (failAt 4): the replay re-applies the whole roll-forward, and
-    // the staging token must make the count update a no-op
-    intercept[java.io.IOException] {
-      MinhashSignatureStore.writeBatchImpl(spark, docsDf(5L -> bText),
-        store, 16, 4, perms, failAt = 4)
-    }
-    MinhashSignatureStore.dedupAgainst(spark, docsDf(51L -> freshText),
-      store, perms, T).collect()
-    assert(meta(store) === Some(truth(store)),
-      "a replay over an already-applied count must not double-add")
+    assert(rows === truth, "a crash before the bands commit adds nothing")
+    MinhashSignatureStore.append(spark, docsDf(5L -> bText), store, perms)
+    assert(rows === truth)
     MinhashSignatureStore.rebuild(spark, store, 48, 8, perms)
-    assert(meta(store) === Some(truth(store)), "rebuild replaces the total")
-    // a legacy store (no metadata): the probe falls back to the footer
-    // sweep, and the next append re-seeds the exact total
-    assert(new java.io.File(store, "_bands_rows").delete())
-    val legacy = verdictMap(MinhashSignatureStore.dedupAgainst(spark,
-      docsDf(52L -> freshText), store, perms, T))
-    assert(legacy(52L)._1 === false, "fallback probe still verdicts " +
-      "against the full store (52 duplicates the appended 3)")
-    MinhashSignatureStore.append(spark,
-      docsDf(6L -> "u1 u2 u3 u4 u5"), store, perms)
-    assert(meta(store) === Some(truth(store)),
-      "an append onto a metadata-less store re-seeds the exact total")
+    assert(rows === truth, "rebuild replaces the total")
+    // rebuild reads the docs head, so the crashed append's docs commit
+    // (doc 4) is banded with the rest: five docs, eight bands each
+    assert(rows === 5L * 8)
+    val names = new java.io.File(store).listFiles().map(_.getName).toSet
+    assert(names === Set("docs", "bands"),
+      s"no marker, row-count or scheme sidecar and no staging: $names")
   }
 
-  test("storedBandsRows surfaces the commit-metadata count and reads " +
-      "None on a legacy store (the r17 probe-leg routing signal: " +
-      "absent metadata must route conservative)") {
+  test("storedBandsRows surfaces the bands log's row count, and a store " +
+      "with no bands snapshot fails loudly (the r17 probe-leg routing " +
+      "signal)") {
     val store = freshStore("rowsaccessor")
     MinhashSignatureStore.build(spark, docsDf(1L -> h1Text, 2L -> h2Text),
       store, 16, 4, perms)
-    val truth = spark.read.parquet(s"$store/bands").count()
     assert(MinhashSignatureStore.storedBandsRows(spark, store)
-      === Some(truth), "accessor returns the committed exact count")
+      === SnapshotLog.read(spark, s"$store/bands").count())
     MinhashSignatureStore.append(spark, docsDf(3L -> freshText), store, perms)
     assert(MinhashSignatureStore.storedBandsRows(spark, store)
-      === Some(spark.read.parquet(s"$store/bands").count()),
-      "accessor tracks the append delta")
-    assert(new java.io.File(store, "_bands_rows").delete())
-    assert(MinhashSignatureStore.storedBandsRows(spark, store) === None,
-      "a metadata-less store reads None — the sequential-routing " +
-        "direction, never a guess")
+      === SnapshotLog.read(spark, s"$store/bands").count(),
+      "the count tracks the append delta")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$store/bands/_graft_log"))
+    intercept[java.io.FileNotFoundException] {
+      MinhashSignatureStore.storedBandsRows(spark, store)
+    }
   }
 
   test("rebuild re-bands to a new scheme: probes match a fresh build, " +
@@ -154,11 +119,11 @@ class MinhashStoreCommitSpec extends MssStoreSpecBase {
     // a replay-duplicated append (the dedupStream crash window): its
     // dead bytes must die at rebuild
     MinhashSignatureStore.append(spark, histB, store, perms)
-    assert(spark.read.parquet(s"$store/docs").count() === 4)
+    assert(SnapshotLog.read(spark, s"$store/docs").count() === 4)
 
     MinhashSignatureStore.rebuild(spark, store, 48, 8, perms)
     assert(MinhashSignatureStore.readScheme(spark, store) === ((48, 8)))
-    assert(spark.read.parquet(s"$store/docs").count() === 3,
+    assert(SnapshotLog.read(spark, s"$store/docs").count() === 3,
       "rebuild compacts replay-duplicated docs rows")
 
     // probe equality against a from-scratch 48/8 build of the same docs
@@ -172,32 +137,25 @@ class MinhashStoreCommitSpec extends MssStoreSpecBase {
         verdictMap(MinhashSignatureStore.dedupAgainst(spark, probe, fresh, perms, T)),
       "a rebuilt store must probe exactly like a fresh build at the new scheme")
 
-    // crash injection: pre-publish leaves the OLD scheme fully intact;
-    // post-publish is completed by the next reader
-    val s1 = freshStore("rebuildcrash1")
-    MinhashSignatureStore.build(spark, histA, s1, 16, 4, perms)
-    intercept[java.io.IOException] {
-      MinhashSignatureStore.rebuildImpl(spark, s1, 48, 8, perms, failAt = 1)
-    }
-    assert(MinhashSignatureStore.readScheme(spark, s1) === ((16, 4)),
-      "pre-commit crash: the old scheme stands")
-    val v1 = verdictMap(MinhashSignatureStore.dedupAgainst(
-      spark, docsDf(201L -> h1Text), s1, perms, T))
-    assert(v1(201L)._1 === false, "old store still probes correctly")
-
-    for (fp <- Seq(2, 3)) {
+    // crash injection: before the docs overwrite, and between the docs
+    // and bands overwrites — either way the OLD scheme stands and
+    // probes correctly, and a retried rebuild lands the new one
+    for (fp <- Seq(1, 2)) {
       val s = freshStore(s"rebuildcrash$fp")
       MinhashSignatureStore.build(spark, histA, s, 16, 4, perms)
       intercept[java.io.IOException] {
         MinhashSignatureStore.rebuildImpl(spark, s, 48, 8, perms, failAt = fp)
       }
-      // the next probe completes the swap and reads the NEW scheme
+      assert(MinhashSignatureStore.readScheme(spark, s) === ((16, 4)),
+        s"failpoint $fp: the old scheme stands")
+      val v1 = verdictMap(MinhashSignatureStore.dedupAgainst(
+        spark, docsDf(201L -> h1Text), s, perms, T))
+      assert(v1(201L)._1 === false, "old store still probes correctly")
+      MinhashSignatureStore.rebuild(spark, s, 48, 8, perms)
+      assert(MinhashSignatureStore.readScheme(spark, s) === ((48, 8)))
       val v = verdictMap(MinhashSignatureStore.dedupAgainst(
         spark, docsDf(201L -> h1Text), s, perms, T))
-      assert(MinhashSignatureStore.readScheme(spark, s) === ((48, 8)),
-        s"failpoint $fp: recovery must finish the rebuild swap")
       assert(v(201L)._1 === false && v(201L)._3 === 1.0)
-      assert(!new java.io.File(s, "_commit").exists)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.MinhashSignatureStore
+import graft.operators.{MinhashSignatureStore, SnapshotLog}
 import graft.queries.Extras
 
 /** Cross-run incremental near-dup dedup: store lifecycle semantics
@@ -122,7 +122,7 @@ class MinhashStoreSpec extends MssStoreSpecBase {
     assert(docs0.subsetOf(docs1) && bands0.subsetOf(bands1),
       "append must not rewrite or drop history files")
     assert(docs1.size > docs0.size && bands1.size > bands0.size)
-    assert(spark.read.parquet(s"$store/docs").count() === 3)
+    assert(SnapshotLog.read(spark, s"$store/docs").count() === 3)
 
     // the appended doc re-probed against the store that now contains it:
     // the d1 ≠ d2 guard keeps it from matching itself
@@ -146,7 +146,7 @@ class MinhashStoreSpec extends MssStoreSpecBase {
       dup, 16, 4, perms)
     MinhashSignatureStore.append(spark, batch, dup, perms)
     MinhashSignatureStore.append(spark, batch, dup, perms)
-    assert(spark.read.parquet(s"$dup/docs").count() === 4,
+    assert(SnapshotLog.read(spark, s"$dup/docs").count() === 4,
       "the duplicated append really does leave a duplicate row")
     // a later batch matching the duplicated doc: same keep AND same
     // n_dups/max_jaccard — matches count DOCS, not rows
@@ -229,7 +229,10 @@ class MinhashStoreSpec extends MssStoreSpecBase {
   test("half-built store (no scheme file) fails loudly, not silently") {
     val store = freshStore("torn")
     MinhashSignatureStore.build(spark, docsDf(1L -> h1Text), store, 16, 4, perms)
-    new java.io.File(s"$store/_scheme").delete()
+    // the scheme lives in the bands log: a store whose bands commit
+    // never landed has none
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$store/bands/_graft_log"))
     intercept[java.io.FileNotFoundException] {
       MinhashSignatureStore.dedupAgainst(spark, docsDf(9L -> h2Text),
         store, perms, T)

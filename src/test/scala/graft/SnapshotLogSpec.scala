@@ -1300,4 +1300,71 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(SnapshotLog.read(spark, t).as[(Long, String, String)].collect().sorted.toSeq
       == before, "compaction is data-identical")
   }
+
+  test("per-file row counts survive a checkpoint boundary and a forward replay") {
+    val t = freshTable()
+    // a string-only table: no numeric column, so no (min, max) stats,
+    // yet every file still gets its row count. 12 commits put
+    // checkpoints at v1 and v10 and deltas everywhere else.
+    def strRows(i: Int) = rows(s"p${i % 3}", (i * 100) until (i * 100 + i))
+      .select($"payload", $"part")
+    (1 to 12).foreach { i =>
+      if (i == 1) SnapshotLog.overwrite(strRows(i), t, Seq("part"))
+      else SnapshotLog.append(strRows(i), t, Seq("part"))
+    }
+    Deletes.deleteByKeys(spark, t, "payload", Seq("v500").toDF("payload"), "part") // v13
+    def exact(v: Long): Unit = {
+      val snap = SnapshotLog.snapshotAt(spark, t, v)
+      assert(snap.rows.keySet == snap.files.toSet,
+        s"v$v: one count per listed file, none for unlinked ones")
+      assert(snap.files.map(snap.rows).sum == SnapshotLog.readAt(spark, t, v).count(),
+        s"v$v: the counts sum to the rows a read returns")
+    }
+    assert(SnapshotLog.snapshotAt(spark, t, 13).stats.isEmpty)
+    Seq(1L, 9L, 10L, 12L, 13L).foreach(exact)
+    // expire the chain: v12 is promoted to a checkpoint, v13 replays
+    // forward from it
+    SnapshotLog.vacuum(spark, t, retainLast = 2, staleGraceMs = 0L)
+    assert(SnapshotLog.versions(spark, t) == Seq(12L, 13L))
+    Seq(12L, 13L).foreach(exact)
+  }
+
+  test("table properties survive append, merge and compact, and a lost " +
+      "commit race") {
+    val t = freshTable()
+    val p1 = Map("layout" -> "v1")
+    SnapshotLog.overwrite(rows("a", 1 to 3), t, Seq("part"), Some(_ ++ p1)) // v1
+    SnapshotLog.append(rows("a", 4 to 5), t, Seq("part"))                 // v2
+    SnapshotLog.merge(spark, t,
+      Seq((2L, "a", "u2")).toDF("id", "part", "payload"), "id", "part")   // v3
+    SnapshotLog.append(rows("a", 6 to 7), t, Seq("part"))                 // v4
+    val (vc, compacted) = SnapshotLog.compact(spark, t, maxFiles = 1)     // v5
+    assert(compacted.nonEmpty && vc == 5L)
+    (1L to 5L).foreach { v =>
+      assert(SnapshotLog.snapshotAt(spark, t, v).properties == p1,
+        s"v$v carries the properties unchanged")
+    }
+    // a loser planned against v5 loses the race to a property commit:
+    // its update is a function of the HEAD's map, so both survive
+    val stale = SnapshotLog.snapshotAt(spark, t, 5)
+    SnapshotLog.append(rows("b", Seq(8)), t, Seq("part"),
+      Some(_ + ("winner" -> "w")))                                         // v6
+    val v = SnapshotLog.commit(spark, t, "append", stale.schema,
+      stale.partCols, Some(stale), _ => false,
+      propertiesUpdate = Some(_ + ("loser" -> "l")))(identity)            // v7
+    assert(SnapshotLog.snapshotAt(spark, t, v).properties ==
+      p1 ++ Map("winner" -> "w", "loser" -> "l"))
+  }
+
+  test("nested nullability is no schema conflict: a table rewritten from " +
+      "its own read still takes appends of a freshly built frame") {
+    val t = freshTable()
+    // array(lit) has containsNull = false; every parquet read comes
+    // back containsNull = true
+    val built = Seq((1L, "a")).toDF("id", "part").withColumn("arr", array(lit("x")))
+    SnapshotLog.overwrite(built, t, Seq("part"))
+    SnapshotLog.overwrite(SnapshotLog.read(spark, t), t, Seq("part"))
+    SnapshotLog.append(built.withColumn("id", lit(2L)), t, Seq("part"))
+    assert(SnapshotLog.read(spark, t).count() == 2)
+  }
 }

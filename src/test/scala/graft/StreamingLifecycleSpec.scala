@@ -98,11 +98,11 @@ class StreamingLifecycleSpec extends AnyFunSuite {
       b1.coalesce(1).write.mode("append").parquet(feed)
       q1.processAllAvailable()
     } finally q1.stop()
-    val ledger = new java.io.File(graft.streaming.StreamLedger.dir(
-      org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(store), root + "/ckpt").toUri.getPath)
-    assert(new java.io.File(ledger, "batch-0").exists)
+    // the stream's batch ids live in the bands log's transaction map
+    val appId = MinhashSignatureStore.streamAppId(spark, root + "/ckpt")
+    def committedBatch(): Option[Long] = graft.operators.SnapshotLog
+      .headSnapshot(spark, store + "/bands").get.txns.get(appId)
+    assert(committedBatch() === Some(0L))
     val keptB1 = spark.read.parquet(root + "/verdicts/batch-0")
       .filter(col("keep")).count()
     // between-runs maintenance: the store outgrew 16/4 -> rebuild
@@ -110,8 +110,8 @@ class StreamingLifecycleSpec extends AnyFunSuite {
     assert(MinhashSignatureStore.rebuildIfOutgrown(
       spark, store, Extras.Perms, policy), "the store must rebuild")
     assert(MinhashSignatureStore.readScheme(spark, store) === ((48, 8)))
-    assert(new java.io.File(ledger, "batch-0").exists,
-      "the rebuild swap must not touch the stream ledger")
+    assert(committedBatch() === Some(0L),
+      "the rebuild's commits must carry the stream's transaction map")
     // run 2: SAME checkpoint — batch 0 is not replayed, batch 1 (b2)
     // probes under the rebuilt scheme
     val q2 = startStream()
@@ -199,7 +199,7 @@ class StreamingLifecycleSpec extends AnyFunSuite {
 
   test("dedupStream's batch-id ledger skips replayed batches; unmarked " +
       "batches land normally") {
-    import graft.operators.MinhashSignatureStore
+    import graft.operators.{MinhashSignatureStore, SnapshotLog}
     import graft.queries.Extras
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -208,7 +208,11 @@ class StreamingLifecycleSpec extends AnyFunSuite {
     val store = root + "/store"
     MinhashSignatureStore.build(spark,
       docs.filter(col("doc_id") % 2 === 0), store, 16, 4, Extras.Perms)
-    val histDocs = spark.read.parquet(store + "/docs").count()
+    val histDocs = SnapshotLog.read(spark, store + "/docs").count()
+    val bands = store + "/bands"
+    val appId = MinhashSignatureStore.streamAppId(spark, root + "/ckpt")
+    def committedBatch(): Option[Long] =
+      SnapshotLog.headSnapshot(spark, bands).get.txns.get(appId)
     val feed = root + "/feed"
     new java.io.File(feed).mkdirs()
     val q = MinhashSignatureStore.dedupStream(
@@ -217,22 +221,20 @@ class StreamingLifecycleSpec extends AnyFunSuite {
       store, root + "/verdicts", Extras.Perms,
       Extras.MinhashJaccardThreshold, root + "/ckpt")
     try {
-      // batch id 0 is pre-marked (as after a crash between marker write
-      // and checkpoint commit): the delivered batch must be SKIPPED —
-      // no verdicts, no append. Markers live under this checkpoint's
-      // ledger namespace (ADVICE r12).
-      val ledger = new java.io.File(graft.streaming.StreamLedger.dir(
-        org.apache.hadoop.fs.FileSystem.getLocal(
-          spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(store), root + "/ckpt").toUri.getPath)
-      ledger.mkdirs()
-      new java.io.File(ledger, "batch-0").createNewFile()
+      // batch id 0 is pre-committed in the bands log under this
+      // checkpoint's app id (as after a crash between the bands commit
+      // and the checkpoint commit): the delivered batch must be
+      // SKIPPED — no verdicts, no append (ADVICE r12: ids are per
+      // checkpoint)
+      val head = SnapshotLog.headSnapshot(spark, bands).get
+      SnapshotLog.commit(spark, bands, "append", head.schema, head.partCols,
+        txn = Some(appId -> 0L))(identity)
       docs.filter(col("doc_id") % 4 === 1).coalesce(1)
         .write.mode("append").parquet(feed)
       q.processAllAvailable()
       assert(!new java.io.File(root + "/verdicts/batch-0").exists,
         "a ledger-marked batch id must not probe again")
-      assert(spark.read.parquet(store + "/docs").count() == histDocs,
+      assert(SnapshotLog.read(spark, store + "/docs").count() == histDocs,
         "a ledger-marked batch id must not append again")
       // the following batch (id 1) is unmarked: verdicts land and the
       // kept docs grow the store
@@ -242,10 +244,10 @@ class StreamingLifecycleSpec extends AnyFunSuite {
       val v1 = spark.read.parquet(root + "/verdicts/batch-1")
       assert(v1.count() == docs.filter(col("doc_id") % 4 === 3).count())
       val kept = v1.filter(col("keep")).count()
-      assert(spark.read.parquet(store + "/docs").count() == histDocs + kept,
+      assert(SnapshotLog.read(spark, store + "/docs").count() == histDocs + kept,
         "exactly the kept docs append")
-      assert(new java.io.File(ledger, "batch-1").exists,
-        "the processed batch commits its marker")
+      assert(committedBatch() === Some(1L),
+        "the processed batch commits its id")
     } finally q.stop()
 
     // A FRESH checkpoint pointed at the same store restarts batch ids

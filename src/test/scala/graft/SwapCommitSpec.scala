@@ -3,11 +3,12 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{MinhashSignatureStore, SwapCommit}
+import graft.operators.{AnnIndex, SwapCommit}
 
 /** The layout-swap protocol's concurrency layers (ADVICE r13): the
-  * per-root JVM lock, the reader grace window, race-tolerant
-  * roll-forward primitives, and GC of publish/replace litter.
+  * per-root JVM lock, the reader grace window, the race-tolerant
+  * replace, and GC of publish/replace litter — exercised through the
+  * protocol's one user, [[graft.operators.AnnIndex]].
   */
 class SwapCommitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -95,88 +96,77 @@ class SwapCommitSpec extends AnyFunSuite {
     }
   }
 
-  test("two recoverers racing the same committed merge both succeed " +
-      "and every staged file lands exactly once") {
-    val f = localFs
-    (1 to 20).foreach { i =>
-      val root = tmpRoot(s"mrace$i")
-      val dst = new Path(root, "docs")
-      write(f, new Path(dst, "live.parquet"), "live")
-      val src = new Path(root, "_staged/docs")
-      (1 to 5).foreach(k => write(f, new Path(src, s"part-$k.parquet"), s"p$k"))
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val ts = (1 to 2).map(_ => new Thread(() =>
-        try SwapCommit.mergeTree(f, src, dst)
-        catch { case t: Throwable => errs.add(t) }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      assert(errs.isEmpty, s"round $i: racing merge threw ${errs.peek()}")
-      val names = f.listStatus(dst).map(_.getPath.getName).toSet
-      assert(names === Set("live.parquet") ++ (1 to 5).map(k => s"part-$k.parquet"),
-        s"round $i: merged exactly once, live files untouched")
-    }
+  /** A two-cell index whose cell 2 holds 24 vectors: over a cap of
+    * 16, so an optimize splits it (AnnIndexSpec's skewed fixture).
+    */
+  private def skewedIndex(p: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val cents = Seq(
+      (1L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cid", "c")
+    val hot = (0 until 12).map(i => (10L + i, Seq(0.0, 1.0 + 0.002 * i, 1.0 + 0.01 * i, 0.0))) ++
+      (0 until 12).map(i => (30L + i, Seq(0.0, 1.0 + 0.002 * i + 0.001, -(1.0 + 0.01 * i), 0.0)))
+    val cold = (0 until 8).map(i => (50L + i, Seq(1.0 + 0.01 * i, 0.0, 0.0, 0.0)))
+    AnnIndex.build((hot ++ cold).toDF("vec_id", "v"), cents, p)
+    cents
   }
+
+  private def occupancy(p: String): Map[Long, Long] = spark.read.parquet(p)
+    .groupBy(org.apache.spark.sql.functions.col("cell").cast("long").as("cell"))
+    .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def indexDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-swap-$name").toString
 
   test("a crashed commit recovered by many concurrent entry points " +
       "applies exactly once (the per-root lock serializes recovery)") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val perms = graft.queries.Extras.Perms
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-swap-conc").toString
-    new java.io.File(store).delete()
-    MinhashSignatureStore.build(spark,
-      Seq(1L -> "a0 a1 a2 a3 a4 a5 a6 a7").toDF("doc_id", "text"),
-      store, 16, 4, perms)
-    // crash AFTER the marker publish: the batch is committed but
-    // unapplied — exactly what racing recoveries then fight over
+    val ref = indexDir("concref")
+    val cents = skewedIndex(ref)
+    AnnIndex.optimize(spark, ref, cents, maxOccupancy = 16L)
+    val p = indexDir("conc")
+    skewedIndex(p)
+    // crash AFTER the marker publish, before any cell swap: the split
+    // is committed but unapplied — exactly what racing recoveries then
+    // fight over
     intercept[java.io.IOException] {
-      MinhashSignatureStore.writeBatchImpl(spark,
-        Seq(30L -> "w0 w1 w2 w3 w4 w5 w6 w7").toDF("doc_id", "text"),
-        store, 16, 4, perms, failAt = 2)
+      AnnIndex.optimizeImpl(spark, p, cents, maxOccupancy = 16L,
+        failAfterSwaps = 0)
     }
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val applied = new java.util.concurrent.atomic.AtomicInteger()
     val ts = (1 to 8).map(_ => new Thread(() =>
-      try MinhashSignatureStore.recover(spark, store)
+      try { if (AnnIndex.recover(spark, p).isDefined) applied.incrementAndGet() }
       catch { case t: Throwable => errs.add(t) }))
     ts.foreach(_.start()); ts.foreach(_.join())
     assert(errs.isEmpty, s"concurrent recovery threw ${errs.peek()}")
-    assert(!new java.io.File(store, "_commit").exists)
-    assert(spark.read.parquet(s"$store/docs").count() === 2,
-      "the committed batch applied exactly once")
-    val v = MinhashSignatureStore.dedupAgainst(spark,
-        Seq(40L -> "w0 w1 w2 w3 w4 w5 w6 w7").toDF("doc_id", "text"),
-        store, perms, 0.7)
-      .filter(col("doc_id") === 40L).collect().head
-    assert(!v.getBoolean(1), "the recovered batch is fully probe-visible")
+    assert(applied.get === 1, "exactly one entry point rolls the swap forward")
+    assert(!new java.io.File(p, "_optimize_commit").exists)
+    assert(occupancy(p) === occupancy(ref),
+      "the committed split applied exactly once")
   }
 
   test("a reader waits out a live writer's commit window instead of " +
       "rolling the marker forward itself") {
     import spark.implicits._
-    val perms = graft.queries.Extras.Perms
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-swap-grace").toString
-    new java.io.File(store).delete()
-    MinhashSignatureStore.build(spark,
-      Seq(1L -> "a0 a1 a2 a3 a4 a5 a6 a7").toDF("doc_id", "text"),
-      store, 16, 4, perms)
-    val root = new Path(store)
+    val p = indexDir("grace")
+    val cents = skewedIndex(p)
+    val root = new Path(p)
     val f = localFs
-    // a marker whose payload would CRASH any recoverer that applies it
-    // (unknown mode) — a reader honoring the grace must never touch it
-    SwapCommit.publish(f, root, "_commit", "bogus-mode should-not-run")
+    // a marker naming staging that does not exist: any recoverer that
+    // applies it fails — a reader honoring the grace must never touch it
+    SwapCommit.publish(f, root, "_optimize_commit", "_optimize-missing")
     // the "live writer in another process": clears its marker mid-grace
     val writer = new Thread(() => {
       Thread.sleep(150)
-      f.delete(new Path(root, "_commit"), false)
+      f.delete(new Path(root, "_optimize_commit"), false)
     })
     writer.start()
-    val v = MinhashSignatureStore.dedupAgainst(spark,
-        Seq(9L -> "a0 a1 a2 a3 a4 a5 a6 a7").toDF("doc_id", "text"),
-        store, perms, 0.7)
-      .collect().head
+    val got = AnnIndex.probe(spark, p,
+        Seq((9L, Seq(0.0, 1.0, 1.0, 0.0))).toDF("p_id", "p"), cents,
+        nprobe = 2, k = 3)
+      .collect()
     writer.join()
-    assert(!v.getBoolean(1),
+    assert(got.length === 3,
       "the probe proceeds normally once the writer finishes")
   }
 }
